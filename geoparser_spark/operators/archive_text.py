@@ -32,6 +32,7 @@ import gzip
 import io
 import tarfile
 import zipfile
+import zlib
 from struct import error as struct_error
 
 from geoparser_spark.operators.html_main import extract_html_blocks
@@ -62,6 +63,14 @@ MAX_ENTRIES = 512          # entries walked per archive (incl. nested)
 MAX_MEMBER_BYTES = 32 << 20   # one decompressed member
 MAX_TOTAL_BYTES = 128 << 20   # sum of decompressed members per payload
 MAX_DEPTH = 2              # archive-in-archive recurses once
+
+#: what damaged container bytes raise out of zipfile/tarfile/gzip: bad
+#: headers and truncation, corrupt deflate data (zlib.error), and the
+#: zip entries the stdlib cannot read — encrypted (RuntimeError) or an
+#: unsupported compression method (its subclass NotImplementedError)
+_ARCHIVE_ERRORS = (zipfile.BadZipFile, tarfile.TarError, gzip.BadGzipFile,
+                   EOFError, OSError, ValueError, KeyError, struct_error,
+                   zlib.error, RuntimeError)
 
 
 def _norm(s: str) -> str:
@@ -141,8 +150,6 @@ _ENTRY_EXTRACTORS: dict = {
     ".mov": _wrap_spans_b64(extract_video_b64_spans),
 }
 
-_ARCHIVE_SUFFIXES = (".zip", ".tar", ".tgz", ".tar.gz", ".gz")
-
 
 class _Budget:
     """Mutable walk budget shared across nesting levels."""
@@ -170,16 +177,18 @@ def _entry_spans(name: str, raw: bytes, depth: int,
     low = name.lower().rstrip("/")
     base = low.rsplit("/", 1)[-1]
     # nested archives first, longest-suffix wins (.tar.gz over .gz)
-    if low.endswith((".zip", ".tar", ".tgz")) or low.endswith(".tar.gz"):
+    if low.endswith((".zip", ".tar", ".tgz", ".gz")):
         if depth + 1 >= MAX_DEPTH:  # depth = current archive's level
             return []
-        if low.endswith(".zip"):
-            return _zip_spans(raw, depth + 1, budget)
-        return _tar_spans(raw, depth + 1, budget)
-    if low.endswith(".gz"):
-        if depth + 1 >= MAX_DEPTH:
+        try:
+            if low.endswith(".zip"):
+                return _zip_spans(raw, depth + 1, budget)
+            if low.endswith((".tar", ".tgz", ".tar.gz")):
+                return _tar_spans(raw, depth + 1, budget)
+            return _gzip_spans(raw, low[:-3], depth + 1, budget)
+        except _ARCHIVE_ERRORS:
+            # a damaged nested archive degrades alone, like a leaf entry
             return []
-        return _gzip_spans(raw, low[:-3], depth + 1, budget)
     dot = base.rfind(".")
     fn = _ENTRY_EXTRACTORS.get(base[dot:]) if dot >= 0 else _txt_spans
     if fn is None:
@@ -203,9 +212,14 @@ def _zip_spans(raw: bytes, depth: int, budget: _Budget) -> list[tuple]:
                 continue
             if not budget.admit(info.file_size):
                 continue
-            with zf.open(info) as f:
-                # cap the actual read too — file_size is attacker data
-                member = f.read(MAX_MEMBER_BYTES + 1)
+            try:
+                with zf.open(info) as f:
+                    # cap the actual read too — file_size is attacker data
+                    member = f.read(MAX_MEMBER_BYTES + 1)
+            except _ARCHIVE_ERRORS:
+                # the central directory still indexes the other members:
+                # a damaged, encrypted or unsupported one degrades alone
+                continue
             if len(member) > MAX_MEMBER_BYTES:
                 continue
             out.extend(_entry_spans(info.filename, member, depth, budget))
@@ -243,8 +257,7 @@ def _gzip_spans(raw: bytes, inner_name: str, depth: int,
 def _run_archive(fn, raw: bytes) -> list[tuple]:
     try:
         return fn(raw, 0, _Budget())
-    except (zipfile.BadZipFile, tarfile.TarError, gzip.BadGzipFile,
-            EOFError, OSError, ValueError, KeyError, struct_error):
+    except _ARCHIVE_ERRORS:
         return []
 
 

@@ -364,8 +364,7 @@ def line_dedup_cms(docs: DataFrame, max_repeats: int = 2,
 
 def simhash_col(text_col: str = "text", bits: int = 64) -> Column:
     """The SimHash fingerprint as a pure COLUMN expression — usable in
-    any projection, batch or streaming (streaming/incremental.py keys
-    its bounded dedup state on it).  See :func:`simhash` for the
+    any projection, batch or streaming.  See :func:`simhash` for the
     design notes."""
     norm_sql = (
         f"split(trim(lower(regexp_replace({text_col},"

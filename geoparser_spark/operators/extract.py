@@ -3,7 +3,7 @@ ordered main-content text + media spans.
 
 Reference dataflow replaced: per-doc HTTP round-trip to a Tika server
 (geoparser_app/views.py:125,357-402 — ~0.6 docs/sec sequential) becomes
-one Arrow-batched ``mapInPandas`` stage: JVM ships columnar batches to
+one Arrow-batched ``mapInArrow`` stage: JVM ships columnar batches to
 the Python worker, the worker parses a whole batch, ships columnar
 results back.  No per-row UDF, no driver loop, no network hop.
 
@@ -21,7 +21,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from geoparser_spark.operators.html_main import extract_html_blocks
@@ -68,10 +67,9 @@ def _as_text_spans(fn):
     return run
 
 
-# One dispatch table shared by the dict-based and flat-column extract
-# paths — a format lands in the engine by registering here (the Tika
-# auto-detect role, geoparser_app/views.py:125, resolved from the
-# span's declared kind).
+# The extract dispatch table — a format lands in the engine by
+# registering here (the Tika auto-detect role,
+# geoparser_app/views.py:125, resolved from the span's declared kind).
 _SPAN_EXTRACTORS: dict = {
     "html": extract_html_blocks,  # emits (kind, text, media_ref) itself
     "pdf_bytes": extract_pdf_b64_spans,  # text + image-XObject media spans
@@ -99,62 +97,17 @@ _SPAN_EXTRACTORS: dict = {
 }
 
 
-def extract_doc_spans(spans: list[dict]) -> list[dict]:
-    """Pure-Python core: input span dicts → ordered output span dicts.
+def extract_doc_spans_cols(kinds, texts, refs, offs, lo: int, hi: int) -> list[tuple]:
+    """Pure-Python extract core over one document's spans, given as
+    parallel flat columns sliced [lo, hi) the way the Arrow kernel
+    reads them — no per-span dict allocation.  Returns the ordered
+    output span tuples (kind, text, media_ref, order), ``order`` dense
+    from 0.
 
     Deterministic; processes spans in ``offset`` order (offset is data,
-    never implicit row order — SURVEY.md §4.2 ordering discipline).
-    """
-    out: list[dict] = []
-    if spans is None:  # Arrow hands array cells over as numpy arrays —
-        spans = []     # never test their truthiness
-    for span in sorted(spans, key=lambda s: s.get("offset") if s.get("offset") is not None else 0):
-        kind = span.get("kind") or ""
-        text = span.get("text")
-        media_ref = span.get("media_ref")
-        fn = _SPAN_EXTRACTORS.get(kind)
-        if fn is not None and text:
-            for k, t, m in fn(text):
-                out.append({"kind": k, "text": t, "media_ref": m})
-        elif kind == "text" and text:
-            t = _norm_text(text)
-            if t:
-                out.append({"kind": "text", "text": t, "media_ref": None})
-        elif media_ref is not None and (kind in MEDIA_KINDS or not text):
-            out.append({"kind": kind, "text": None, "media_ref": media_ref})
-        elif text:
-            # unknown text-bearing kind: conservative passthrough
-            t = _norm_text(text)
-            if t:
-                out.append({"kind": "text", "text": t, "media_ref": None})
-    for i, s in enumerate(out):
-        s["order"] = i
-    return out
-
-
-def _extract_batches(passthrough: tuple[str, ...]):
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": pdf["doc_id"]}
-            for c in passthrough:
-                out[c] = pdf[c]
-            out["spans"] = [
-                [
-                    (s["kind"], s["text"], s["media_ref"], s["order"])
-                    for s in extract_doc_spans(spans)
-                ]
-                for spans in pdf["spans"]
-            ]
-            yield pd.DataFrame(out)
-
-    return kernel
-
-
-def extract_doc_spans_cols(kinds, texts, refs, offs, lo: int, hi: int) -> list[tuple]:
-    """Flat-column variant of :func:`extract_doc_spans` for the Arrow
-    path: operates on parallel lists sliced [lo, hi) — no per-span dict
-    allocation.  Returns output span tuples (kind, text, media_ref,
-    order)."""
+    never implicit row order — SURVEY.md §4.2 ordering discipline).  The
+    sort is stable, so spans with EQUAL offsets keep their input order,
+    which is unspecified across a shuffle."""
     idx = sorted(range(lo, hi), key=lambda i: offs[i] if offs[i] is not None else 0)
     out: list[tuple] = []
     for i in idx:
@@ -325,7 +278,7 @@ def extract_with_skew_split(docs: DataFrame, num_partitions: int,
     # and the extract kernel itself processes spans in offset order, so
     # the split's pre-sort adds nothing for an unsplit doc.  (Relative
     # order of EQUAL offsets is unspecified either way — the documented
-    # stable-sort caveat on extract_doc_spans.)
+    # stable-sort caveat on extract_doc_spans_cols.)
     singles = docs.where(F.size("spans") <= max_spans)
     mega = (
         split_mega_docs(docs.where(F.size("spans") > max_spans), max_spans)

@@ -149,8 +149,8 @@ def zorder_cell(lat_col: Column, lon_col: Column, precision: int = 8) -> Column:
     the same parquet files, so viewport/radius scans prune on footer
     min/max instead of reading the globe (the clustering trick behind
     Iceberg/Delta Z-ordering, expressed as a plain column).  Purely
-    integer after the quantization, so engine-portable: the oracle runs
-    the identical shift/mask arithmetic.
+    integer after the quantization, so engine-portable: any SQL engine
+    reproduces it with the identical shift/mask arithmetic.
 
     precision <= 26 keeps the interleaved id inside a signed LONG with
     room to spare; 8 bits ~ 156 km cells at the equator, fine for file

@@ -257,8 +257,8 @@ def resolve_mentions(cands: DataFrame) -> DataFrame:
     # NULL-strict ADM1 key: concat_ws silently drops NULL components, so
     # a candidate and an ADM1 row both with NULL admin1_code would
     # collapse to the bare country code and spuriously match — SQL
-    # equality (the oracle's a1.admin1_code = c.admin1_code) is never
-    # true on NULL, and neither is this key.
+    # equality (a1.admin1_code = c.admin1_code) is never true on NULL,
+    # and neither is this key.
     a1_key = F.when(
         F.col("country_code").isNotNull() & F.col("admin1_code").isNotNull(),
         F.concat_ws("|", "country_code", "admin1_code"),

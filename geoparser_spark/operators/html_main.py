@@ -318,9 +318,7 @@ def _build_tree(html: str) -> _Node | None:
 
 def extract_links(html: str) -> list[str]:
     """Outbound link extraction: every <a href> in document order —
-    the crawl-graph edge source (WARC pages → links → canonical URLs
-    (operators/urls.py) → host edges → pagerank closes the curation
-    loop the reference's Sparkler-fed corpus implies).  Skips
+    the crawl-graph edge source.  Skips
     fragment-only, javascript:, mailto: and empty hrefs; keeps
     relative URLs (resolution against the page URL is the caller's
     join).  Damaged markup degrades to [] — never an exception."""

@@ -93,8 +93,8 @@ def radius_search(points: DataFrame, lat: float, lon: float,
     can never exclude a true hit) short-circuits the trig for the
     overwhelming majority of rows.
 
-    Adds ``dist_km`` (rounded to 6 decimals).  Both engines evaluate
-    the same IEEE-double formula; the oracle comparison is stable
+    Adds ``dist_km`` (rounded to 6 decimals).  The brute-force test
+    evaluates the same IEEE-double formula; its comparison is stable
     because the test data is fixed (a point landing within 1e-6 km of
     the boundary would be a one-time data property, not run noise)."""
     from geoparser_spark.operators.geojoin import haversine_km
@@ -115,9 +115,8 @@ def _bm25_doc_stats(text_col: str, terms: list[str]):
     """One bound expression per doc: struct(dl, tf0, tf1, ...).
 
     The token array is evaluated ONCE via the transform(array(x))[0]
-    binding (the projection-collapse discipline documented in
-    operators/curation.py:_bound) — otherwise every per-term tf filter
-    re-inlines split(normalize(text))."""
+    binding — otherwise Catalyst's projection collapse re-inlines
+    split(normalize(text)) into every per-term tf filter."""
     from geoparser_spark.operators.geotag import normalize_text
 
     toks = F.split(normalize_text(F.col(text_col)), " ")
@@ -160,7 +159,7 @@ def bm25_topk(docs: DataFrame, terms: list[str], k: int = 10,
     idf uses Lucene's BM25 form ln(1 + (N - df + .5)/(df + .5)),
     computed DRIVER-side in Python so no libm call runs on the JVM —
     the scoring expression multiplies Spark doubles by literal doubles,
-    keeping engine and pure-Python oracle bit-identical (every +,*,/ is
+    keeping engine and a pure-Python reference bit-identical (every +,*,/ is
     the same IEEE-754 op in the same order on both sides).
     """
     import math

@@ -1,8 +1,7 @@
 """Text analysis for corpus curation: language ID, quality scoring,
 token counting, document fingerprinting.
 
-All native column expressions (the oracle SQL in __spark_entry__ mirrors
-each formula in DuckDB) — no UDFs anywhere.
+All native column expressions — no UDFs anywhere.
 """
 
 from __future__ import annotations

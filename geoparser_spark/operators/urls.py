@@ -97,8 +97,7 @@ def links_from_html(docs: "DataFrame", html_col: str = "html",
     document order (operators/html_main.extract_links — same parse
     chain as the main-content extractor).  Arrow-batched map-only
     kernel; feeds canonicalize_url + the host-graph edge derivation
-    that pagerank consumes — WARC pages → links → canonical hosts →
-    ranking, the full crawl-curation loop."""
+    — WARC pages → links → canonical hosts."""
     from collections.abc import Iterator
 
     import pandas as pd

@@ -19,7 +19,7 @@ This module makes release ENFORCED instead of advisory:
   — every cache persisted inside the block is dropped at exit, even on
   error;
 * long-lived consumers that materialize operator outputs one at a time
-  (the oracle harness, bench.py, notebook sessions) call
+  (benchmark drivers, notebook sessions) call
   ``release_all()`` at each drain point.
 
 A pytest (tests/test_caching.py) materializes each formerly-leaking

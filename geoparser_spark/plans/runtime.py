@@ -59,7 +59,7 @@ def split_mega_docs(docs: DataFrame, max_spans: int = 64) -> DataFrame:
     untrusted data (SURVEY.md §4.2), and a doc whose spans arrive
     offset-shuffled would otherwise reassemble wrong.  (For spans with
     EQUAL offsets the relative order is unspecified, matching the
-    stable-sort caveat documented on extract_doc_spans.)
+    stable-sort caveat documented on extract_doc_spans_cols.)
 
     Output: (doc_id, chunk_id, n_chunks, spans).  Reassemble with
     :func:`reassemble_chunks` after a per-chunk stage."""
@@ -185,11 +185,32 @@ def _append_ref(df: DataFrame, ref: str) -> None:
 def read_done_parts(spark: SparkSession, manifest_dir: str) -> DataFrame:
     """Manifest partitions already completed (any run_id — restartable
     across job submissions, like the reference's resume offset but
-    partition-grained)."""
-    try:
-        m = _read_ref(spark, manifest_dir)
-    except Exception:
-        return spark.createDataFrame([], "part_id int")
+    partition-grained).
+
+    Only a manifest that does not exist yet means "nothing done"; every
+    other read error raises, so a corrupt or unreadable manifest can
+    never silently re-run the whole input."""
+    from geoparser_spark.sources.catalog import is_catalog_ref, strip_catalog_prefix
+
+    nothing_done = spark.createDataFrame([], "part_id int")
+    if is_catalog_ref(manifest_dir):
+        tbl = strip_catalog_prefix(manifest_dir)
+        if not spark.catalog.tableExists(tbl):
+            return nothing_done
+        m = spark.table(tbl)
+    else:
+        # the path's own Hadoop FileSystem, so hdfs:// or s3a:// manifests
+        # resolve exactly as the reader would resolve them
+        path = spark._jvm.org.apache.hadoop.fs.Path(manifest_dir)
+        fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+        if not fs.exists(path):
+            return nothing_done
+        # read the two columns needed with their written types: a first
+        # manifest append killed before its commit leaves a directory
+        # with no data files, which then reads as empty instead of
+        # failing schema inference
+        m = spark.read.schema("partition_id int, status string").parquet(
+            manifest_dir)
     return (
         m.where(F.col("status") == "done")
         .select(F.col("partition_id").alias("part_id"))

@@ -1,2 +1,3 @@
-"""Sources & sinks: GeoNames TSV, docs/extracted/geotagged tables,
-JSON export/import (SURVEY.md §2.1)."""
+"""Sources & sinks: GeoNames TSV, WARC crawl files, and the
+Iceberg-or-Parquet table seam for the docs/extracted/geotagged tables
+(SURVEY.md §2.1)."""

@@ -40,15 +40,6 @@ def is_catalog_ref(ref: str) -> bool:
     return not ref.lower().endswith(_FILE_EXTS)
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    """True iff an Iceberg SparkCatalog is on the classpath."""
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
 def read_table(spark: SparkSession, ref: str) -> DataFrame:
     if is_catalog_ref(ref):
         return spark.read.table(strip_catalog_prefix(ref))

@@ -315,6 +315,14 @@ def generate_doc(doc_index: int, seed: int = 42, mega_every: int = 1000,
     return doc_row, expected_row
 
 
+def span_columns(spans: list[dict]) -> tuple[list, list, list, list]:
+    """Split span dicts into the parallel (kind, text, media_ref, offset)
+    columns that ``extract.extract_doc_spans_cols`` reads, as the Arrow
+    kernel hands them over.  A missing key reads as None."""
+    return tuple([s.get(c) for s in spans]
+                 for c in ("kind", "text", "media_ref", "offset"))
+
+
 def _gen_batches(which: str, seed: int, mega_every: int, mega_factor: int):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

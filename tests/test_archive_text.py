@@ -9,13 +9,15 @@ from __future__ import annotations
 import base64
 import gzip
 import io
+import struct
 import tarfile
 import zipfile
 
 import pytest
 
 from geoparser_spark.operators import archive_text as at
-from geoparser_spark.operators.extract import extract_doc_spans
+from geoparser_spark.operators.extract import extract_doc_spans_cols
+from geoparser_spark.testing.corpus import span_columns
 
 
 def _b64(raw: bytes) -> str:
@@ -171,8 +173,76 @@ class TestNestingAndBudget:
         assert at.extract_gz_b64_spans(_b64(raw)) == []
 
 
+def _corrupt_deflate(raw: bytes, offset: int) -> bytes:
+    """Mutate a VALID deflate stream starting at ``offset``: set its
+    first block header to the reserved block type 3, which every
+    inflater rejects ("invalid block type")."""
+    b = bytearray(raw)
+    b[offset] |= 0x06
+    return bytes(b)
+
+
+def _zip_member_data_offset(raw: bytes, name: str) -> int:
+    info = zipfile.ZipFile(io.BytesIO(raw)).getinfo(name)
+    n_name, n_extra = struct.unpack(
+        "<HH", raw[info.header_offset + 26:info.header_offset + 30])
+    return info.header_offset + 30 + n_name + n_extra
+
+
+def _zip_cd_entry(raw: bytes, index: int) -> int:
+    """Offset of the ``index``-th central-directory header."""
+    pos = -1
+    for _ in range(index + 1):
+        pos = raw.index(b"PK\x01\x02", pos + 1)
+    return pos
+
+
+class TestDamagedMembers:
+    """Damage built by mutating VALID fixtures: random bytes never get
+    past the zip header, so they cannot reach the member decoders."""
+
+    def _texts(self, spans):
+        return [t for k, t, _ in spans if k == "text"]
+
+    def test_corrupt_deflate_member_degrades_alone(self):
+        raw = _zip_bytes([("good.txt", b"good one " * 8),
+                          ("bad.txt", b"bad member " * 8),
+                          ("good2.txt", b"good two " * 8)])
+        raw = _corrupt_deflate(raw, _zip_member_data_offset(raw, "bad.txt"))
+        texts = self._texts(at.extract_zip_b64_spans(_b64(raw)))
+        assert texts == [("good one " * 8).strip(), ("good two " * 8).strip()]
+
+    def test_corrupt_deflate_gzip_body_degrades(self):
+        raw = gzip.compress(b"hello world " * 10)
+        assert at.extract_gz_b64_spans(_b64(_corrupt_deflate(raw, 10))) == []
+
+    def test_corrupt_nested_archives_degrade_alone(self):
+        bad_zip = _zip_bytes([("x.txt", b"inner text " * 8)])
+        bad_zip = _corrupt_deflate(
+            bad_zip, _zip_member_data_offset(bad_zip, "x.txt"))
+        bad_gz = _corrupt_deflate(gzip.compress(b"inner gz " * 8), 10)
+        raw = _zip_bytes([("good.txt", b"good one"),
+                          ("bad.zip", bad_zip),
+                          ("truncated.zip", _zip_bytes([("y.txt", b"y")])[:-22]),
+                          ("bad.txt.gz", bad_gz),
+                          ("good2.txt", b"good two")])
+        texts = self._texts(at.extract_zip_b64_spans(_b64(raw)))
+        assert texts == ["good one", "good two"]
+
+    def test_encrypted_and_unsupported_members_degrade_alone(self):
+        raw = bytearray(_zip_bytes([("enc.txt", b"secret"),
+                                    ("odd.txt", b"odd method"),
+                                    ("plain.txt", b"plain text")]))
+        enc = _zip_cd_entry(bytes(raw), 0)
+        raw[enc + 8] |= 0x01                        # encrypted flag bit
+        odd = _zip_cd_entry(bytes(raw), 1)
+        raw[odd + 10:odd + 12] = struct.pack("<H", 99)   # AES method id
+        texts = self._texts(at.extract_zip_b64_spans(_b64(bytes(raw))))
+        assert texts == ["plain text"]
+
+
 class TestDispatchIntegration:
-    def test_zip_kind_flows_through_extract_doc_spans(self):
+    def test_zip_kind_flows_through_extract_dispatch(self):
         raw = _zip_bytes([
             ("a.txt", b"alpha text"),
             ("page.html", b"<html><body><p>beta html</p></body></html>"),
@@ -183,12 +253,12 @@ class TestDispatchIntegration:
             {"kind": "zip_bytes", "text": _b64(raw), "media_ref": None,
              "offset": 1},
         ]
-        out = extract_doc_spans(spans)
-        texts = [s["text"] for s in out if s["kind"] == "text"]
+        out = extract_doc_spans_cols(*span_columns(spans), 0, len(spans))
+        texts = [t for k, t, _, _ in out if k == "text"]
         assert texts[0] == "lead-in"
         assert "alpha text" in texts
         assert any("beta html" in t for t in texts)
-        assert [s["order"] for s in out] == list(range(len(out)))
+        assert [o for *_, o in out] == list(range(len(out)))
 
     def test_tar_kind_registered(self):
         from geoparser_spark.operators.extract import _SPAN_EXTRACTORS

@@ -20,7 +20,137 @@ from geoparser_spark.operators.audio_meta import (
     parse_flac,
     parse_wav,
 )
-from geoparser_spark.operators.extract import extract_doc_spans
+from geoparser_spark.operators.extract import extract_doc_spans_cols
+from geoparser_spark.testing.corpus import span_columns
+
+
+# Scalar encode->decode replays: the independent references the
+# block-vectorized numpy ADPCM / G.711 decoders are compared against.
+
+_IMA_STEP_TAB = [
+    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31,
+    34, 37, 41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130,
+    143, 157, 173, 190, 209, 230, 253, 279, 307, 337, 371, 408, 449,
+    494, 544, 598, 658, 724, 796, 876, 963, 1060, 1166, 1282, 1411,
+    1552, 1707, 1878, 2066, 2272, 2499, 2749, 3024, 3327, 3660, 4026,
+    4428, 4871, 5358, 5894, 6484, 7132, 7845, 8630, 9493, 10442,
+    11487, 12635, 13899, 15289, 16818, 18500, 20350, 22385, 24623,
+    27086, 29794, 32767,
+]
+_IMA_ADJ_TAB = [-1, -1, -1, -1, 2, 4, 6, 8]
+
+
+def _ima_replay(ch0: list, spb: int = 129) -> list:
+    """Scalar replay of one channel through the IMA ADPCM
+    encode->decode round trip.  The decoder's step update mirrors the
+    encoder's by construction, so the decoded stream IS the encoder's
+    predictor sequence — one state machine, independently checking the
+    production block-vectorized numpy decode byte path."""
+    out = []
+    idx = 0
+    n = len(ch0)
+    for start in range(0, n, spb):
+        pred = ch0[start]
+        out.append(pred)
+        for t in range(1, spb):
+            k = start + t
+            sample = ch0[k] if k < n else ch0[n - 1]
+            step = _IMA_STEP_TAB[idx]
+            diff = sample - pred
+            nib = 0
+            if diff < 0:
+                nib = 8
+                diff = -diff
+            vp = step >> 3
+            if diff >= step:
+                nib |= 4
+                diff -= step
+                vp += step
+            step >>= 1
+            if diff >= step:
+                nib |= 2
+                diff -= step
+                vp += step
+            step >>= 1
+            if diff >= step:
+                nib |= 1
+                vp += step
+            pred = pred - vp if nib & 8 else pred + vp
+            pred = max(-32768, min(32767, pred))
+            idx = max(0, min(88, idx + _IMA_ADJ_TAB[nib & 7]))
+            out.append(pred)
+    return out[:n]                     # fact-chunk trim of the pad
+
+
+_MS_COEF1_TAB = [256, 512, 0, 192, 240, 460, 392]
+_MS_COEF2_TAB = [0, -256, 0, 64, 0, -208, -232]
+_MS_ADAPT_TAB = [230, 230, 230, 230, 307, 409, 512, 614,
+                 768, 614, 512, 409, 307, 230, 230, 230]
+
+
+def _ms_replay(ch0: list, spb: int = 130) -> list:
+    """Scalar replay of channel 0 through the MS-ADPCM encode->decode
+    round trip (fixture encoder: predictor = block % 7 for channel 0,
+    idelta carried across blocks from 16, truncating-division nibble
+    quantizer; decoder arithmetic is the Microsoft spec's).  The
+    decoded stream IS the encoder's reconstruction sequence — one
+    state machine, independently checking the production
+    block-vectorized numpy decode byte path."""
+    out = []
+    delta = 16
+    n = len(ch0)
+    for b, start in enumerate(range(0, n, spb)):
+        c1 = _MS_COEF1_TAB[b % 7]
+        c2 = _MS_COEF2_TAB[b % 7]
+        s2 = ch0[start]
+        s1 = ch0[start + 1] if start + 1 < n else s2
+        out.extend((s2, s1))
+        for t in range(2, spb):
+            k = start + t
+            sample = ch0[k] if k < n else ch0[n - 1]
+            acc = s1 * c1 + s2 * c2
+            pred = acc // 256 if acc >= 0 else -((-acc) // 256)  # C trunc
+            err = sample - pred
+            q = abs(err) // delta
+            nib = max(-8, min(7, q if err >= 0 else -q))
+            samp = max(-32768, min(32767, pred + nib * delta))
+            s2, s1 = s1, samp
+            delta = max(16, (_MS_ADAPT_TAB[nib & 0x0F] * delta) >> 8)
+            out.append(samp)
+    return out[:n]                     # fact-chunk trim of the pad
+
+
+def _g711_replay(ch0: list, law: str) -> list:
+    """Scalar replay of one channel through the G.711 encode->decode
+    round trip: build the canonical 256-entry decode table, quantize
+    each sample to the nearest table value (ties to the LOWER code —
+    numpy argmin's first-minimum rule), return the decoded stream.
+    The table arithmetic deliberately restates audio_meta's — the
+    independent leg is the QUANTIZE path (scalar min-key vs numpy
+    argmin over the byte stream); the table itself is double-entry
+    pinned by the ITU anchor-point test, not by duplication."""
+    tab = []
+    for code in range(256):
+        if law == "ulaw":
+            u = ~code & 0xFF
+            t = (((u & 0x0F) << 3) + 0x84) << ((u & 0x70) >> 4)
+            tab.append(0x84 - t if u & 0x80 else t - 0x84)
+        else:
+            a = code ^ 0x55
+            t = (a & 0x0F) << 4
+            seg = (a & 0x70) >> 4
+            if seg == 0:
+                t += 8
+            elif seg == 1:
+                t += 0x108
+            else:
+                t = (t + 0x108) << (seg - 1)
+            tab.append(t if a & 0x80 else -t)
+    out = []
+    for s in ch0:
+        best = min(range(256), key=lambda c: (abs(tab[c] - s), c))
+        out.append(tab[best])
+    return out
 
 
 def test_wav_params_and_duration_floor():
@@ -88,19 +218,20 @@ def test_wav_truncated_data_still_reports_nominal_duration():
 
 def test_audio_kind_through_extract_dispatch():
     wav = make_mini_wav(comments=["embedded caption"], n_frames=100)
-    spans = extract_doc_spans([
+    doc = [
         {"kind": "text", "text": "before", "offset": 0},
         {"kind": "audio_bytes",
          "text": base64.b64encode(wav).decode(), "offset": 1},
-    ])
-    kinds = [(s["kind"], s["media_ref"]) for s in spans]
+    ]
+    spans = extract_doc_spans_cols(*span_columns(doc), 0, len(doc))
+    kinds = [(k, m) for k, _, m, _ in spans]
     assert kinds == [
         ("text", None),
         ("audio", "aud://wav/8000Hz/1ch/12ms"),
         ("text", None),
     ]
-    assert spans[2]["text"] == "embedded caption"
-    assert [s["order"] for s in spans] == [0, 1, 2]
+    assert spans[2][1] == "embedded caption"
+    assert [o for *_, o in spans] == [0, 1, 2]
 
 
 @given(st.binary(max_size=300))
@@ -249,7 +380,6 @@ def test_wav_ima_adpcm_matches_scalar_replay():
         decode_wav_pcm,
         make_wav_adpcm,
     )
-    from geoparser_spark.testing.pyoracle_queries import _ima_replay
 
     rng = np.random.default_rng(61)
     # 2 channels, multiple blocks plus a padded tail (n % 129 != 0)
@@ -286,7 +416,6 @@ def test_wav_g711_matches_scalar_replay():
         decode_wav_pcm,
         make_wav_g711,
     )
-    from geoparser_spark.testing.pyoracle_queries import _g711_replay
 
     rng = np.random.default_rng(67)
     s = rng.integers(-32768, 32768, size=(301, 2)).astype(np.int64)
@@ -417,7 +546,6 @@ def test_wav_ms_adpcm_matches_scalar_replay():
         decode_wav_pcm,
         make_wav_ms_adpcm,
     )
-    from geoparser_spark.testing.pyoracle_queries import _ms_replay
 
     rng = np.random.default_rng(71)
     # 2 channels, 4 blocks (predictor rotates through 4 coefficient
@@ -427,7 +555,7 @@ def test_wav_ms_adpcm_matches_scalar_replay():
     sr, got = decode_wav_pcm(blob)
     assert sr == 22050
     assert got.shape == (417, 2)              # fact chunk trims the pad
-    # channel 0 against the INDEPENDENT pyoracle replay (predictor b%7)
+    # channel 0 against the INDEPENDENT scalar replay (predictor b%7)
     assert got[:, 0].tolist() == _ms_replay([int(v) for v in s[:, 0]])
     # each block's first two frames are stored verbatim in its header
     for b in range(4):

@@ -8,7 +8,7 @@ import zlib
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from geoparser_spark.operators.extract import extract_doc_spans
+from geoparser_spark.operators.extract import extract_doc_spans_cols
 from geoparser_spark.operators.image_meta import (
     extract_image_b64_spans,
     extract_image_spans,
@@ -21,6 +21,7 @@ from geoparser_spark.operators.xml_text import (
     extract_xml_text_blocks,
     make_mini_xml,
 )
+from geoparser_spark.testing.corpus import span_columns
 
 # ------------------------------------------------------------------ xml
 
@@ -142,12 +143,10 @@ def test_image_and_xml_kinds_through_extract_dispatch():
         {"kind": "image_bytes", "text": base64.b64encode(png).decode(),
          "media_ref": None, "offset": 1},
     ]
-    assert extract_doc_spans(spans) == [
-        {"kind": "text", "text": "x one", "media_ref": None, "order": 0},
-        {"kind": "image", "text": None, "media_ref": "img://png/4x3",
-         "order": 1},
-        {"kind": "text", "text": "embedded caption", "media_ref": None,
-         "order": 2},
+    assert extract_doc_spans_cols(*span_columns(spans), 0, len(spans)) == [
+        ("text", "x one", None, 0),
+        ("image", None, "img://png/4x3", 1),
+        ("text", "embedded caption", None, 2),
     ]
 
 

@@ -40,8 +40,8 @@ def _assemble(grid: np.ndarray) -> np.ndarray:
 
 def test_idct_basis_matches_pure_python_mirror():
     """The 64 basis integers are the codec's only transcendental input;
-    the pyoracle replica recomputes them with math.cos — pin equality
-    so the oracle can never drift from the engine."""
+    recompute them with math.cos and pin equality so the table can
+    never drift."""
     for u in range(8):
         cu = (1.0 / math.sqrt(2.0)) if u == 0 else 1.0
         for x in range(8):

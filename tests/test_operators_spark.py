@@ -1,5 +1,5 @@
 """Operator-family tests: tiles, dedup, similarity, text analysis,
-multimodal plumbing, serving ops, geonames source, JSON round-trip.
+multimodal plumbing, serving ops, geonames source, table sinks, BM25.
 """
 
 from __future__ import annotations
@@ -461,6 +461,71 @@ def test_serve_non_empty_locations(spark):
     assert [r.doc_id for r in serve.non_empty_locations(df).collect()] == ["a"]
 
 
+def _haversine_km_ref(lat1, lon1, lat2, lon2):
+    """Brute-force great-circle distance, written from the formula."""
+    from geoparser_spark.operators.geojoin import EARTH_RADIUS_KM
+
+    p1, p2 = math.radians(lat1), math.radians(lat2)
+    h = (math.sin((p2 - p1) / 2) ** 2
+         + math.cos(p1) * math.cos(p2)
+         * math.sin(math.radians(lon2 - lon1) / 2) ** 2)
+    return 2 * EARTH_RADIUS_KM * math.asin(math.sqrt(min(h, 1.0)))
+
+
+def test_radius_search_matches_brute_force(spark):
+    """Every point within the radius, and only those, against haversine
+    over all points — including hits across the antimeridian and over
+    both poles, where longitude differences are not distances."""
+    rng = np.random.RandomState(11)
+    pts = [(float(a), float(b)) for a, b in zip(rng.uniform(-90, 90, 300),
+                                                rng.uniform(-180, 180, 300))]
+    pts += [(10.0, 179.9), (10.2, -179.8), (9.5, -178.0), (10.0, 175.0),
+            (89.8, 180.0), (89.6, -90.0), (89.9, 45.0), (88.0, 0.0),
+            (90.0, 0.0), (-90.0, 123.0), (-89.3, -60.0), (-88.0, 10.0)]
+    df = spark.createDataFrame(
+        [(i, lat, lon) for i, (lat, lon) in enumerate(pts)],
+        "pid int, latitude double, longitude double")
+    queries = [(10.0, 179.5, 300.0),     # straddles the antimeridian
+               (10.0, -180.0, 120.0),
+               (89.5, 0.0, 200.0),       # north pole cap
+               (-90.0, 0.0, 200.0),      # centered on the south pole
+               (35.0, 20.0, 2500.0),
+               (0.0, 0.0, 1.0)]          # nothing this close
+    for lat, lon, r in queries:
+        want = {}
+        for i, (a, b) in enumerate(pts):
+            d = round(_haversine_km_ref(lat, lon, a, b), 6)
+            if d <= r:
+                want[i] = d
+        got = {row.pid: row.dist_km
+               for row in serve.radius_search(df, lat, lon, r).collect()}
+        assert set(got) == set(want), (lat, lon, r)
+        for i, d in want.items():
+            assert got[i] == pytest.approx(d, abs=2e-6), (lat, lon, r, i)
+    # the cross-seam cases really are hits
+    near_seam = {row.pid for row in
+                 serve.radius_search(df, 10.0, 179.5, 300.0).collect()}
+    assert {300, 301, 302} <= near_seam
+    south = {row.pid for row in
+             serve.radius_search(df, -90.0, 0.0, 200.0).collect()}
+    assert {309, 310} <= south
+
+
+def test_facet_counts_matches_counter(spark):
+    """Group counts equal collections.Counter over the same column,
+    NULL names counted as their own facet."""
+    from collections import Counter
+
+    from geoparser_spark.operators.tiles import facet_counts
+
+    rng = np.random.RandomState(5)
+    names = [None if k == 0 else f"place{k}"
+             for k in rng.randint(0, 9, size=500)]
+    df = spark.createDataFrame([(n,) for n in names], "loc_name string")
+    got = {r.loc_name: r.cnt for r in facet_counts(df).collect()}
+    assert got == dict(Counter(names))
+
+
 # ------------------------------------------------- geonames TSV source
 
 def test_read_geonames_tsv(spark, tmpdir):
@@ -479,53 +544,6 @@ def test_read_geonames_tsv(spark, tmpdir):
     assert r.country_code == "US"
     assert r.admin1_code == "CA"
     assert r.population == 141371
-
-
-# ----------------------------------------- S9 JSON export/import round-trip
-
-def test_json_round_trip_preserves_spans(spark, tmpdir):
-    from geoparser_spark.sources.json_io import export_json, import_json
-    from geoparser_spark.testing.corpus import build_docs
-
-    docs = build_docs(spark, 20, seed=42)
-    out = os.path.join(tmpdir, "docs_json")
-    export_json(docs, out)
-    back = import_json(spark, out, docs.schema)
-    assert back.count() == 20
-    j = docs.alias("a").join(back.alias("b"), "doc_id")
-    diff = j.where(~(F.col("a.spans") == F.col("b.spans"))).count()
-    assert diff == 0
-
-
-def test_json_round_trip_extracted_and_geotagged(spark, gazetteer, tmpdir):
-    """S9 end-to-end: extracted AND geotagged tables survive the JSON
-    export/import with their nested schemas intact (the reference
-    stringifies these shapes into Solr fields and eval()s them back)."""
-    from geoparser_spark.operators.extract import extract
-    from geoparser_spark.operators.geotag import geotag
-    from geoparser_spark.sources.json_io import (
-        export_extracted,
-        export_geotagged,
-        import_extracted,
-        import_geotagged,
-    )
-    from geoparser_spark.testing.corpus import build_docs
-
-    ext = extract(build_docs(spark, 15, seed=42))
-    p1 = os.path.join(tmpdir, "ext_json")
-    export_extracted(ext, p1)
-    back_ext = import_extracted(spark, p1)
-    assert back_ext.schema["spans"].dataType == ext.schema["spans"].dataType
-    j = ext.alias("a").join(back_ext.alias("b"), "doc_id")
-    assert j.where(~(F.col("a.spans") == F.col("b.spans"))).count() == 0
-
-    tagged = geotag(ext, gazetteer)
-    p2 = os.path.join(tmpdir, "geo_json")
-    export_geotagged(tagged, p2)
-    back_geo = import_geotagged(spark, p2)
-    assert back_geo.count() == tagged.count()
-    jg = tagged.alias("a").join(back_geo.alias("b"), "doc_id")
-    assert jg.where(~(F.col("a.locations") == F.col("b.locations"))).count() == 0
 
 
 def test_write_tiles_csv_khooshe_contract(spark, tmpdir):
@@ -635,44 +653,6 @@ def test_resize_images_box_fit(spark):
     assert (got["small"].width, got["small"].height) == (100, 50)
     assert got["small"].resized is False
     assert got["big"].media_bytes.startswith(b"RSZ:256x128:")
-
-
-def test_pii_scrub_counts_and_redaction(spark):
-    from geoparser_spark.operators.pii import pii_scrub
-
-    df = spark.createDataFrame(
-        [
-            ("a", "mail bob.smith+x@corp.example.org now"),
-            ("b", "host 192.168.0.1 and 10.0.0.255 up"),
-            ("c", "call +14155501234 or 415-555-0000 today"),
-            ("d", "no pii here, just 1.2 version and a@b"),
-        ],
-        "doc_id string, text string",
-    )
-    got = {r.doc_id: r for r in pii_scrub(df).collect()}
-    assert (got["a"].n_email, got["a"].n_ipv4, got["a"].n_phone) == (1, 0, 0)
-    assert got["a"].redacted == "mail <EMAIL> now"
-    assert got["b"].n_ipv4 == 2
-    assert got["b"].redacted == "host <IP> and <IP> up"
-    assert got["c"].n_phone == 2
-    assert got["c"].redacted == "call <PHONE> or <PHONE> today"
-    # "1.2" is not an IPv4; "a@b" has no TLD — untouched
-    assert (got["d"].n_email, got["d"].n_ipv4, got["d"].n_phone) == (0, 0, 0)
-    assert got["d"].redacted == got["d"].text
-
-
-def test_pii_redaction_passes_never_rematch_tags(spark):
-    from geoparser_spark.operators.pii import pii_scrub
-
-    # an email whose redaction sits next to digits must not create a
-    # phone/IP match in the later passes; a NANP number glued to a
-    # trailing letter (no word boundary) is deliberately not matched
-    df = spark.createDataFrame(
-        [("x", "id 415-555-0000, 415-555-0000x bob@ex.com 10.0.0.1")],
-        "doc_id string, text string",
-    )
-    r = pii_scrub(df).collect()[0]
-    assert r.redacted == "id <PHONE>, 415-555-0000x <EMAIL> <IP>"
 
 
 def test_extract_media_meta_real_headers_and_degrade(spark):
@@ -923,26 +903,3 @@ def test_winnow_fingerprints(spark):
     assert not (got[1] & got[3])
     assert 4 not in got
     assert len(got[5]) == 1
-
-
-def test_orc_roundtrip_nested(spark, tmpdir):
-    """ORC must round-trip the interleaved array<struct> spans exactly
-    (self-describing schema, no inference step)."""
-    import os
-
-    from geoparser_spark.sources.columnar_io import export_orc, import_orc
-    from geoparser_spark.testing.corpus import build_docs
-
-    docs = build_docs(spark, 30, seed=42, mega_every=10, mega_factor=3)
-    path = os.path.join(tmpdir, "orc_docs")
-    export_orc(docs, path)
-    back = import_orc(spark, path)
-    # file formats surface every top-level field nullable; the TYPES
-    # (incl. the nested struct) must match exactly
-    assert [(f.name, f.dataType) for f in back.schema.fields] == \
-        [(f.name, f.dataType) for f in docs.schema.fields]
-    a = sorted((r.doc_id, [tuple(s) for s in r.spans])
-               for r in docs.collect())
-    b = sorted((r.doc_id, [tuple(s) for s in r.spans])
-               for r in back.collect())
-    assert a == b

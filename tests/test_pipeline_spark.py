@@ -150,6 +150,47 @@ def test_resumable_stage_on_catalog_ref(spark, docs, expected):
         spark.sql("DROP TABLE IF EXISTS gp_resume_man")
 
 
+def test_read_done_parts_fresh_manifest_is_nothing_done(spark, tmp_path,
+                                                       monkeypatch):
+    """A manifest that does not exist yet means "nothing done", found
+    without a read attempt: the reader's failed lookup of the missing
+    path is what logged a Java stack trace on every fresh run."""
+    from geoparser_spark.plans.runtime import read_done_parts
+
+    reads = []
+    real = type(spark.read).parquet
+
+    def recording_read(self, *paths, **kwargs):
+        reads.append(paths)
+        return real(self, *paths, **kwargs)
+
+    monkeypatch.setattr(type(spark.read), "parquet", recording_read)
+    assert read_done_parts(spark, str(tmp_path / "manifest")).count() == 0
+    assert reads == []
+
+
+def test_read_done_parts_uncommitted_manifest_is_nothing_done(spark,
+                                                              tmp_path):
+    """A first manifest append killed before its commit leaves only a
+    ``_temporary`` directory: no row was committed, so nothing is done."""
+    from geoparser_spark.plans.runtime import read_done_parts
+
+    (tmp_path / "manifest" / "_temporary" / "0").mkdir(parents=True)
+    assert read_done_parts(spark, str(tmp_path / "manifest")).count() == 0
+
+
+def test_read_done_parts_corrupt_manifest_raises(spark, tmp_path):
+    """A manifest that exists but cannot be read fails loudly instead of
+    silently re-running every partition."""
+    from geoparser_spark.plans.runtime import read_done_parts
+
+    man = tmp_path / "manifest"
+    man.mkdir()
+    (man / "part-00000.snappy.parquet").write_bytes(b"PAR1 not parquet PAR1")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        read_done_parts(spark, str(man)).collect()
+
+
 # ----------------------------------------------------------- geotag
 
 def test_geotag_fixtures(spark, gazetteer):

@@ -9,9 +9,10 @@ import base64
 
 from hypothesis import given, settings, strategies as st
 
-from geoparser_spark.operators.extract import extract_doc_spans
+from geoparser_spark.operators.extract import extract_doc_spans_cols
 from geoparser_spark.operators.html_main import extract_html_blocks
 from geoparser_spark.operators.pdf_text import extract_pdf_b64_text_blocks
+from geoparser_spark.testing.corpus import span_columns
 
 _SETTINGS = dict(max_examples=80, deadline=None)
 
@@ -174,15 +175,16 @@ _span = st.fixed_dictionaries(
 @given(st.lists(_span, max_size=12), st.randoms())
 @settings(**_SETTINGS)
 def test_doc_spans_dense_order_and_offset_invariance(spans, rnd):
-    out = extract_doc_spans(spans)
-    assert [s["order"] for s in out] == list(range(len(out)))
+    out = extract_doc_spans_cols(*span_columns(spans), 0, len(spans))
+    assert [o for *_, o in out] == list(range(len(out)))
     # input list order is irrelevant when offsets are distinct —
     # the offset column is the ordering authority (SURVEY.md §4.2)
     offsets = [s["offset"] for s in spans]
     if len(set(offsets)) == len(offsets):
         shuffled = list(spans)
         rnd.shuffle(shuffled)
-        assert extract_doc_spans(shuffled) == out
+        assert extract_doc_spans_cols(
+            *span_columns(shuffled), 0, len(shuffled)) == out
 
 
 @given(st.binary(max_size=300))

@@ -1,11 +1,10 @@
 """Tests for the round-3 relational-breadth family: profiling,
-tf-idf term ranking, banded levenshtein near-dup pairs, and the
-rolling/pivot/rollup/quartile query shapes."""
+tf-idf term ranking, banded levenshtein near-dup pairs and
+histograms."""
 
 from __future__ import annotations
 
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from geoparser_spark.operators.dedup import levenshtein_pairs
 from geoparser_spark.operators.profile import profile_table
@@ -94,49 +93,6 @@ def test_levenshtein_pairs_no_self_and_canonical(spark):
     docs = _ldocs(spark, [(1, "same text"), (2, "same text")])
     got = levenshtein_pairs(docs).collect()
     assert [(r.id_a, r.id_b, r.dist) for r in got] == [(1, 2, 0)]
-
-
-def test_quartiles_exact_discrete_definition(spark):
-    import __spark_entry__ as E
-
-    sf_dir = "/root/testdata/sf0.001"
-    out = {r.lang: r for r in E._docs_length_quartiles(spark, sf_dir).collect()}
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    for lang, row in out.items():
-        vals = sorted(
-            r.n_chars for r in docs.where(F.col("lang") == lang).collect()
-        )
-        n = len(vals)
-        assert row.cnt == n
-        assert row.q25 == vals[(n + 3) // 4 - 1]
-        assert row.q50 == vals[(n + 1) // 2 - 1]
-        assert row.q75 == vals[(n * 3 + 3) // 4 - 1]
-
-
-def test_rolling_sum_frame_semantics(spark):
-    import datetime as dt
-
-    import __spark_entry__ as E
-
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-    rows = [
-        Row(event_id=i, ts=t0 + dt.timedelta(minutes=m), user_id=7,
-            event_type="view", value=1.0)
-        for i, m in enumerate([0, 30, 59, 61, 200])
-    ]
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="gp_roll_")
-    spark.createDataFrame(rows).write.mode("overwrite").parquet(
-        f"{d}/events.parquet"
-    )
-    out = {r.event_id: r for r in E._events_rolling_sum(spark, d).collect()}
-    # event 3 at +61min: frame holds minutes 30, 59, 61 (0 fell out)
-    assert out[3].roll_cnt == 3 and out[3].roll_cents == 300
-    # event 2 at +59min: all of 0, 30, 59 in frame
-    assert out[2].roll_cnt == 3
-    # event 4 at +200min: alone
-    assert out[4].roll_cnt == 1
 
 
 def test_histogram_edges(spark):

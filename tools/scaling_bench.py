@@ -132,20 +132,6 @@ def platform_control(lo: int, hi: int, script: str = CONTROL) -> dict:
     return json.loads(line)
 
 
-def platform_control_at(procs: int, script: str = CONTROL) -> float:
-    """Single-level control throughput (work-units/sec at ``procs``
-    processes).  bench.py embeds BOTH controls in every session
-    (VERDICT r4 #1) so cross-round walls can be normalized against the
-    box's measured health in the SAME window instead of argued from
-    separate probe runs: the parse control tracks the CPU ceiling, the
-    strided-sum control the shared-memory-bus ceiling that this VM's
-    steal/contention windows squeeze first."""
-    out = subprocess.run([sys.executable, "-c", script, str(procs)],
-                         check=True, capture_output=True, text=True)
-    line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
-    return json.loads(line)[f"tp_{procs}"]
-
-
 def main() -> int:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 500_000
     lo = int(sys.argv[2]) if len(sys.argv) > 2 else 8
@@ -204,7 +190,7 @@ def main() -> int:
     # min of the runs: hypervisor steal is strictly one-sided additive
     # noise (a 6-run control measured a 6.1x spread on identical runs,
     # steal bursting to 28%) — the min is the engine, anything above it
-    # is the neighbours.  Same estimator as bench.py / timeit.
+    # is the neighbours.  Same estimator as timeit.
     med = {c: min(results[c]["walls"]) for c in (lo, hi)}
     tp = {c: n_docs / med[c] for c in (lo, hi)}
     eff = (tp[hi] / tp[lo]) / (hi / lo)
