@@ -14,9 +14,15 @@ Rebuild:
     assigns ALL points with a native whole-stage-codegen expression —
     the full dataset never leaves the executors (unlike khooshe's
     driver arrays).
-  * deeper levels run per-cluster ``applyInPandas`` — by then clusters
-    are small and numerous, exactly the grouped-map sweet spot.
-  * extents (dict.csv replacement) are a plain groupBy min/max.
+  * below level 0, one grouped ``applyInPandas`` per level-1 cluster
+    recurses locally down to the leaves, as khooshe itself does
+    (khooshe.py:126-194). It emits one membership row per (point,
+    level); a point whose cluster is a leaf at that level is flagged
+    and carries the cluster's extent.
+  * one Spark aggregate over the membership rows gives every centroid
+    tile and the extents (dict.csv replacement) together.
+  * every tile row carries its cluster's extent, so a viewport read is
+    one filter over the tile table.
 
 SURVEY.md §2.3 Q7 (dedup), Q8 (facet counts), Q9 (recursive k-means),
 Q10 (extent aggregation), S8 (tile sink).
@@ -29,10 +35,19 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geoparser_spark.plans.caching import track
+
 K_CENTROIDS = 15      # reference: khooshe.py:175 CENTROIDS_NUMBER
 LEAF_MAX = 10         # reference: khooshe.py:135 (cluster < 10 → leaf)
 _LLOYD_ITERS = 12
 _SAMPLE_PER_K = 200   # sample size for the level-0 fit
+
+_EXTENT = ["min_lat", "max_lat", "min_lon", "max_lon"]
+_MEMBERS_SCHEMA = (
+    "level int, cluster_path string, latitude double, longitude double, "
+    "info string, is_leaf boolean, "
+    "min_lat double, max_lat double, min_lon double, max_lon double"
+)
 
 
 def dedup_points(points: DataFrame) -> DataFrame:
@@ -83,24 +98,53 @@ def assign_native(df: DataFrame, centroids: np.ndarray,
     )
 
 
-def _split_group(pdf: pd.DataFrame, k: int) -> pd.DataFrame:
-    """Grouped-map kernel: fit k-means inside one cluster and extend
-    cluster_path with the local assignment.
+def _cluster_members(pdf: pd.DataFrame, k: int, leaf_max: int,
+                     max_levels: int) -> pd.DataFrame:
+    """Grouped-map kernel: recurse locally inside one level-1 cluster.
 
-    Rows are canonicalized to (latitude, longitude) order first: the
+    Returns one row per (point, level) from level 1 down to the point's
+    leaf. A cluster of <= ``leaf_max`` points is a leaf: its rows are
+    flagged ``is_leaf`` and carry its extent (numpy min/max are exact).
+    A larger one is split with ``kmeans_fit`` + argmin, its children
+    named ``<path>/<index>``. Clusters at ``max_levels`` are neither
+    leaves nor split.
+
+    Rows are canonicalized to (latitude, longitude) order once: the
     shuffle delivers group rows in nondeterministic fetch order, and
     numpy's pairwise summation inside the Lloyd means is order-
-    sensitive at the last-bit level — sorting makes the fit (and thus
-    the whole pyramid) bit-reproducible across runs."""
+    sensitive at the last-bit level. Every child keeps that order (its
+    index array is a masked subsequence), so each fit sees its points
+    sorted and the whole pyramid is bit-reproducible across runs."""
     pdf = pdf.sort_values(["latitude", "longitude"], kind="mergesort")
     pts = pdf[["latitude", "longitude"]].to_numpy(dtype=np.float64)
-    cents = kmeans_fit(pts, k)
-    d = ((pts[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-    assign = d.argmin(axis=1)
-    out = pdf.copy()
-    out["cluster_path"] = [
-        f"{p}/{a}" for p, a in zip(pdf["cluster_path"], assign)
-    ]
+    clusters = []   # (level, path, member indices, leaf extent or None)
+    todo = [(1, pdf["cluster_path"].iat[0], np.arange(len(pts)))]
+    while todo:
+        level, path, idx = todo.pop()
+        sub = pts[idx]
+        if level == max_levels:
+            clusters.append((level, path, idx, None))
+        elif len(idx) <= leaf_max:
+            lo, hi = sub.min(axis=0), sub.max(axis=0)
+            clusters.append((level, path, idx, (lo[0], hi[0], lo[1], hi[1])))
+        else:
+            clusters.append((level, path, idx, None))
+            cents = kmeans_fit(sub, k)
+            assign = ((sub[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+            for c in np.unique(assign):
+                todo.append((level + 1, f"{path}/{c}", idx[assign == c]))
+    sizes = [len(c[2]) for c in clusters]
+    rows = np.concatenate([c[2] for c in clusters])
+    extent = np.array([c[3] or (np.nan,) * 4 for c in clusters], dtype=np.float64)
+    out = pd.DataFrame({
+        "level": np.repeat(np.array([c[0] for c in clusters], dtype=np.int32), sizes),
+        "cluster_path": np.repeat(np.array([c[1] for c in clusters], dtype=object), sizes),
+        "latitude": pts[rows, 0],
+        "longitude": pts[rows, 1],
+        "info": pdf["info"].to_numpy(dtype=object)[rows],
+        "is_leaf": np.repeat([c[3] is not None for c in clusters], sizes),
+    })
+    out[_EXTENT] = np.repeat(extent, sizes, axis=0)
     return out
 
 
@@ -113,113 +157,88 @@ def build_tile_pyramid(
     """points(latitude, longitude, info) → (tiles, extents).
 
     tiles: (level, cluster_path, latitude, longitude, label, info,
-    is_leaf) — centroid rows per cluster per level; leaf clusters emit
-    their raw points (khooshe leaf-tile behavior, khooshe.py:126-169).
+    is_leaf, min_lat, max_lat, min_lon, max_lon) — centroid rows per
+    cluster per level; leaf clusters emit their raw points (khooshe
+    leaf-tile behavior, khooshe.py:126-169). Each row carries its
+    cluster's extent; level-0 leaves (the whole input fits one leaf)
+    have none and carry NULLs.
     extents: (level, cluster_path, min/max lat/lon) — dict.csv
-    replacement (khooshe.py:88-94)."""
-    spark = points.sparkSession
+    replacement (khooshe.py:88-94).
+
+    The membership rows are cached for the two writes that follow
+    (``plans.caching.track``); run the build and its writes inside
+    ``with released():`` to drop the cache afterwards."""
     state = dedup_points(points).select(
-        F.lit("0").alias("cluster_path"),
         "latitude", "longitude",
         F.coalesce(F.col("info"), F.lit("")).alias("info"),
     )
-    tiles_parts: list[DataFrame] = []
-    extent_parts: list[DataFrame] = []
-
-    for level in range(max_levels):
-        state = state.persist()
-        sizes = state.groupBy("cluster_path").agg(F.count("*").alias("n_pts"))
-        # ---- leaves: emit raw points, retire the cluster
-        leaf_paths = sizes.where(F.col("n_pts") <= F.lit(leaf_max)).select("cluster_path")
-        leaves = state.join(F.broadcast(leaf_paths), "cluster_path", "left_semi")
-        tiles_parts.append(
-            leaves.select(
-                F.lit(level).alias("level"),
-                "cluster_path", "latitude", "longitude",
-                F.lit(1).cast("long").alias("label"),
-                "info",
-                F.lit(True).alias("is_leaf"),
-            )
+    # level 0 is one global cluster: fit on a deterministic sample,
+    # assign natively — full data never reaches the driver.
+    # tie-break the hash key on the coordinates themselves:
+    # pmod collisions at the limit boundary would otherwise make
+    # the sample (and the whole pyramid) run-dependent.
+    limit = k * _SAMPLE_PER_K
+    sample = (
+        state.select("latitude", "longitude")
+        .orderBy(
+            F.pmod(F.xxhash64("latitude", "longitude"), F.lit(100003)),
+            "latitude", "longitude",
         )
-        active = state.join(F.broadcast(leaf_paths), "cluster_path", "left_anti")
-        n_active_clusters = sizes.where(F.col("n_pts") > leaf_max).count()
-        if n_active_clusters == 0:
-            state.unpersist()
-            break
-
-        # ---- split active clusters
-        if level == 0:
-            # one global cluster: fit on a deterministic sample, assign
-            # natively — full data never reaches the driver.
-            # tie-break the hash key on the coordinates themselves:
-            # pmod collisions at the limit boundary would otherwise make
-            # the sample (and the whole pyramid) run-dependent.
-            sample = (
-                active.select("latitude", "longitude")
-                .orderBy(
-                    F.pmod(F.xxhash64("latitude", "longitude"), F.lit(100003)),
-                    "latitude", "longitude",
-                )
-                .limit(k * _SAMPLE_PER_K)
-                .toPandas()
-                .to_numpy(dtype=np.float64)
-            )
-            cents = kmeans_fit(sample, k)
-            nxt = assign_native(active, cents).select(
-                F.concat_ws("/", "cluster_path", F.col("cluster").cast("string")).alias("cluster_path"),
-                "latitude", "longitude", "info",
-            )
-        else:
-            nxt = active.groupBy("cluster_path").applyInPandas(
-                lambda pdf: _split_group(pdf, k),
-                schema="cluster_path string, latitude double, longitude double, info string",
-            )
-        nxt = nxt.persist()
-        # ---- centroid tiles + extents for the new child clusters
-        # centroid display coordinates average through decimal: a double
-        # sum's value depends on partial-aggregation merge order, so the
-        # low-order bits (and a round() at the boundary) would differ
-        # run to run; decimal sums are exact and order-free.
-        agg = nxt.groupBy("cluster_path").agg(
-            F.avg(F.col("latitude").cast("decimal(24,16)"))
-            .cast("double").alias("latitude"),
-            F.avg(F.col("longitude").cast("decimal(24,16)"))
-            .cast("double").alias("longitude"),
-            F.count("*").alias("label"),
-            F.min("info").alias("info"),
-            F.min("latitude").alias("min_lat"),
-            F.max("latitude").alias("max_lat"),
-            F.min("longitude").alias("min_lon"),
-            F.max("longitude").alias("max_lon"),
+        .limit(limit)
+        .toPandas()
+        .to_numpy(dtype=np.float64)
+    )
+    # a sample shorter than its limit is the whole input, so only a
+    # leaf_max at or above the limit needs a count
+    if len(sample) <= leaf_max and (len(sample) < limit or state.count() <= leaf_max):
+        # the whole input is one leaf at level 0; it has no extent
+        tiles = state.select(
+            F.lit(0).alias("level"), F.lit("0").alias("cluster_path"),
+            "latitude", "longitude",
+            F.lit(1).cast("long").alias("label"),
+            "info",
+            F.lit(True).alias("is_leaf"),
+            *[F.lit(None).cast("double").alias(c) for c in _EXTENT],
         )
-        tiles_parts.append(
-            agg.select(
-                F.lit(level + 1).alias("level"),
-                "cluster_path", "latitude", "longitude", "label", "info",
-                F.lit(False).alias("is_leaf"),
-            )
-        )
-        extent_parts.append(
-            agg.select(
-                F.lit(level + 1).alias("level"),
-                "cluster_path", "min_lat", "max_lat", "min_lon", "max_lon",
-            )
-        )
-        state.unpersist()
-        state = nxt
-
-    tiles = tiles_parts[0]
-    for t in tiles_parts[1:]:
-        tiles = tiles.unionByName(t)
-    if extent_parts:
-        extents = extent_parts[0]
-        for e in extent_parts[1:]:
-            extents = extents.unionByName(e)
-    else:
-        extents = spark.createDataFrame(
+        return tiles, points.sparkSession.createDataFrame(
             [], "level int, cluster_path string, min_lat double, max_lat double, min_lon double, max_lon double"
         )
-    return tiles, extents
+
+    cents = kmeans_fit(sample, k)
+    level1 = assign_native(state, cents).select(
+        F.concat_ws("/", F.lit("0"), F.col("cluster").cast("string")).alias("cluster_path"),
+        "latitude", "longitude", "info",
+    )
+    members = track(level1.groupBy("cluster_path").applyInPandas(
+        lambda pdf: _cluster_members(pdf, k, leaf_max, max_levels),
+        schema=_MEMBERS_SCHEMA,
+    ))
+    # centroid display coordinates average through decimal: a double
+    # sum's value depends on partial-aggregation merge order, so the
+    # low-order bits (and a round() at the boundary) would differ
+    # run to run; decimal sums are exact and order-free.
+    agg = members.groupBy("level", "cluster_path").agg(
+        F.avg(F.col("latitude").cast("decimal(24,16)"))
+        .cast("double").alias("latitude"),
+        F.avg(F.col("longitude").cast("decimal(24,16)"))
+        .cast("double").alias("longitude"),
+        F.count("*").alias("label"),
+        F.min("info").alias("info"),
+        F.min("latitude").alias("min_lat"),
+        F.max("latitude").alias("max_lat"),
+        F.min("longitude").alias("min_lon"),
+        F.max("longitude").alias("max_lon"),
+    )
+    leaves = members.where(F.col("is_leaf")).select(
+        "level", "cluster_path", "latitude", "longitude",
+        F.lit(1).cast("long").alias("label"),
+        "info", "is_leaf", *_EXTENT,
+    )
+    centroids = agg.select(
+        "level", "cluster_path", "latitude", "longitude", "label", "info",
+        F.lit(False).alias("is_leaf"), *_EXTENT,
+    )
+    return leaves.unionByName(centroids), agg.select("level", "cluster_path", *_EXTENT)
 
 
 def facet_counts(points: DataFrame, col: str = "loc_name") -> DataFrame:
@@ -229,8 +248,14 @@ def facet_counts(points: DataFrame, col: str = "loc_name") -> DataFrame:
 
 def write_tiles(tiles: DataFrame, path: str) -> None:
     """S8 — tile sink, partitioned by level (replaces the CSV tree at
-    khooshe.py:110-121); partition pruning serves viewport queries."""
-    tiles.write.mode("overwrite").partitionBy("level").parquet(path)
+    khooshe.py:110-121); partition pruning serves viewport queries.
+    The rebalance on ``level`` packs each small level into one file (AQE
+    coalesces its shuffle partitions) while AQE still splits a level
+    larger than the advisory partition size over several tasks."""
+    (
+        tiles.hint("rebalance", "level")
+        .write.mode("overwrite").partitionBy("level").parquet(path)
+    )
 
 
 def write_tiles_csv(tiles: DataFrame, extents: DataFrame, path: str) -> None:
@@ -262,9 +287,13 @@ def viewport_tiles(tiles: DataFrame, extents: DataFrame,
                    min_lat: float, max_lat: float,
                    min_lon: float, max_lon: float) -> DataFrame:
     """Q11 — choose tiles whose extent intersects the viewport (client
-    logic at static/js/khooshe-ol.js:228-269, as range predicates)."""
-    hit = extents.where(
+    logic at static/js/khooshe-ol.js:228-269, as range predicates).
+
+    Every tile row carries its cluster's extent, so this is one filter
+    over ``tiles``; a NULL extent (level-0 leaves) never matches.
+    ``extents`` is unused: it stays in the signature for existing
+    callers."""
+    return tiles.where(
         (F.col("min_lat") <= max_lat) & (F.col("max_lat") >= min_lat)
         & (F.col("min_lon") <= max_lon) & (F.col("max_lon") >= min_lon)
-    ).select("level", "cluster_path")
-    return tiles.join(F.broadcast(hit), ["level", "cluster_path"], "left_semi")
+    )

@@ -102,12 +102,14 @@ MANIFEST = T.StructType(
         T.StructField("rows_in", T.LongType()),
         T.StructField("rows_out", T.LongType()),
         T.StructField("checksum", T.StringType()),
-        T.StructField("wall_ms", T.LongType()),
+        T.StructField("wall_ms", T.IntegerType()),  # resumable_stage writes an int literal
     ]
 )
 
 # ----------------------------------------------------------------- tiles
 # Replaces the khooshe CSV tree (geoparser_app/khooshe.py:110-121).
+# Each row carries its cluster's extent (the dict.csv entry,
+# khooshe.py:88-94); level-0 leaves have none (NULL).
 TILES = T.StructType(
     [
         T.StructField("level", T.IntegerType(), False),
@@ -117,5 +119,9 @@ TILES = T.StructType(
         T.StructField("label", T.LongType()),       # points under the centroid
         T.StructField("info", T.StringType()),
         T.StructField("is_leaf", T.BooleanType()),
+        T.StructField("min_lat", T.DoubleType()),
+        T.StructField("max_lat", T.DoubleType()),
+        T.StructField("min_lon", T.DoubleType()),
+        T.StructField("max_lon", T.DoubleType()),
     ]
 )

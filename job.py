@@ -20,6 +20,7 @@ import time
 from geoparser_spark.operators.extract import extract_with_skew_split
 from geoparser_spark.operators.geotag import geotag, points
 from geoparser_spark.operators.tiles import build_tile_pyramid, write_tiles
+from geoparser_spark.plans.caching import released
 from geoparser_spark.plans.runtime import resumable_stage
 from geoparser_spark.session import get_spark
 from geoparser_spark.sources.geonames import read_geonames_tsv
@@ -74,11 +75,14 @@ def main(argv: list[str] | None = None) -> int:
 
     pts = points(spark.read.parquet(os.path.join(args.output, "geotagged")))
     if args.tiles:
-        tiles, extents = build_tile_pyramid(
-            pts.select("latitude", "longitude", pts["loc_name"].alias("info"))
-        )
-        write_tiles(tiles, os.path.join(args.output, "tiles"))
-        extents.write.mode("overwrite").parquet(os.path.join(args.output, "extents"))
+        # the build caches its membership rows for these two writes;
+        # leaving the block drops that cache
+        with released():
+            tiles, extents = build_tile_pyramid(
+                pts.select("latitude", "longitude", pts["loc_name"].alias("info"))
+            )
+            write_tiles(tiles, os.path.join(args.output, "tiles"))
+            extents.write.mode("overwrite").parquet(os.path.join(args.output, "extents"))
 
     n_docs = spark.read.parquet(os.path.join(args.output, "extracted")).count()
     wall = time.monotonic() - t0

@@ -4,10 +4,13 @@ multimodal plumbing, serving ops, geonames source, table sinks, BM25.
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
 import shutil
 import tempfile
+import uuid
+from contextlib import contextmanager
 
 import numpy as np
 import pytest
@@ -29,6 +32,7 @@ from geoparser_spark.operators.tiles import (
     viewport_tiles,
     write_tiles,
 )
+from geoparser_spark.schemas import TILES
 from geoparser_spark.sources.geonames import read_geonames_tsv
 
 
@@ -88,18 +92,153 @@ def test_extents_bound_their_points(spark):
         assert r.min_lat <= r.max_lat and r.min_lon <= r.max_lon
 
 
-def test_viewport_filter(spark):
+_TILE_COLS = ["level", "cluster_path", "latitude", "longitude", "label",
+              "info", "is_leaf"]
+
+
+def _rows(df, cols=None):
+    return sorted(tuple(r) for r in (df.select(*cols) if cols else df).collect())
+
+
+def _digest(rows) -> str:
+    return hashlib.sha256(repr(rows).encode()).hexdigest()
+
+
+@contextmanager
+def _spark_jobs(spark):
+    """Collect the ids of the Spark jobs run inside the block."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    ids: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# sha256 over the sorted tile rows (the seven columns above) and the
+# sorted extent rows, captured from the level-at-a-time pyramid build
+# (one Spark pass per level); the one-pass build must reproduce them
+# bit for bit.
+_GOLDEN_PYRAMIDS = {
+    "k4_leaf10_levels4": (
+        dict(n=400), dict(k=4, leaf_max=10, max_levels=4),
+        "851ebce985f349e158ddae3bdc5942b9bc7d156fd854509304ff0321a7d4f6bd",
+        "fe725dbcc9b238ede706619c7adf8ff97996b50b3a5f064cac4eb762c1ed8376"),
+    "k4_leaf10_levels1": (
+        dict(n=400), dict(k=4, leaf_max=10, max_levels=1),
+        "db2dd10d7104296630068da05be17a3060090daa2e136dbb605ab30748921fbd",
+        "214f9e09bfbca942cc7017a93bc8a7cb40863ef4493429c145a9d8b9c7b3d465"),
+    "k4_leaf10_levels2": (
+        dict(n=400), dict(k=4, leaf_max=10, max_levels=2),
+        "62335c58d39080cf59366a52c7bff3449d1ef052df984b9736be9cd95339437c",
+        "ab728de30304799809ebbeefa8122c3ed42910de649672b3d6172f4b5b5a41f6"),
+    "level0_leaves_only": (
+        dict(n=4), dict(k=4, leaf_max=10, max_levels=4),
+        "7c62b96ecf8a118a5a519aa0f3aff73c731a5bd688109d7807998ba7b94a513b",
+        "4f53cda18c2baa0c0354bb5f9a3ecbe5ed12ab4d8e11ba873c2f11161202b945"),
+    "n3000_k15_leaf3": (
+        dict(n=3000), dict(k=15, leaf_max=3),
+        "671edc800fbc1582a3f714b5439007080b219760a5c9d1eebb7eb4a4759950bf",
+        "82a6917ad25f367a4693c276617c2055997325f123206101686508c46b50697d"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_GOLDEN_PYRAMIDS))
+def test_tile_pyramid_golden(spark, case):
+    pts_kw, build_kw, tiles_sha, extents_sha = _GOLDEN_PYRAMIDS[case]
+    tiles, extents = build_tile_pyramid(_points_df(spark, **pts_kw), **build_kw)
+    assert _digest(_rows(tiles, _TILE_COLS)) == tiles_sha
+    assert _digest(_rows(extents)) == extents_sha
+
+
+def test_tile_pyramid_schema_is_tiles(spark):
+    """The build's tile rows have the names and types of schemas.TILES,
+    both for a multi-level pyramid and for level-0 leaves only."""
+    want = [(f.name, f.dataType) for f in TILES]
+    for n in (400, 4):
+        tiles, _ = build_tile_pyramid(_points_df(spark, n=n), k=4, leaf_max=10)
+        assert [(f.name, f.dataType) for f in tiles.schema] == want
+
+
+def _intersects(ext, min_lat, max_lat, min_lon, max_lon):
+    return (ext[0] <= max_lat and ext[1] >= min_lat
+            and ext[2] <= max_lon and ext[3] >= min_lon)
+
+
+def test_viewport_tiles_exact(spark):
+    """viewport_tiles returns exactly the tiles whose (level,
+    cluster_path) extent intersects the box. Extents are recomputed in
+    pure Python as the bounding box of each cluster's leaf points."""
     pts = _points_df(spark)
-    tiles, extents = build_tile_pyramid(pts, k=4, leaf_max=10, max_levels=3)
-    # viewport around blob1 only (lat 40, lon -100)
-    vt = viewport_tiles(tiles, extents, 30, 50, -110, -90)
-    got = vt.collect()
-    assert got, "viewport over a blob must return tiles"
-    # no returned cluster may lie entirely in the other hemisphere
-    ext = {(r.level, r.cluster_path): r for r in extents.collect()}
-    for r in got:
-        e = ext[(r.level, r.cluster_path)]
-        assert e.max_lon >= -110 and e.min_lon <= -90
+    tiles, extents = build_tile_pyramid(pts, k=4, leaf_max=10)
+    rows = _rows(tiles, _TILE_COLS)
+    leaves = [r for r in rows if r[6]]
+    # every distinct point sits in exactly one leaf, so a cluster's
+    # points are the leaf points under its path
+    assert sorted((r[2], r[3]) for r in leaves) == sorted(
+        {(r.latitude, r.longitude) for r in pts.collect()})
+
+    def bbox(path):
+        inside = [r for r in leaves
+                  if r[1] == path or r[1].startswith(path + "/")]
+        lats, lons = [r[2] for r in inside], [r[3] for r in inside]
+        return min(lats), max(lats), min(lons), max(lons)
+
+    ext = {(r[0], r[1]): bbox(r[1]) for r in rows}
+    assert ext == {(e[0], e[1]): e[2:] for e in _rows(extents)}
+    boxes = [(30, 50, -110, -90),        # blob 1
+             (-20.5, -19.5, 129.5, 130.5),  # inside blob 2
+             (70.05, 70.15, 10.05, 10.15),  # between outlier points
+             (0, 10, 0, 10)]             # no tile
+    for box in boxes:
+        want = [r for r in rows if _intersects(ext[(r[0], r[1])], *box)]
+        got = _rows(viewport_tiles(tiles, extents, *box), _TILE_COLS)
+        assert got == want, box
+    assert not viewport_tiles(tiles, extents, 0, 10, 0, 10).collect()
+
+    # level-0 leaves only: no tile has an extent, so no box hits
+    tiles0, extents0 = build_tile_pyramid(_points_df(spark, n=4), k=4, leaf_max=10)
+    assert tiles0.count() == 7 and extents0.count() == 0
+    assert not viewport_tiles(tiles0, extents0, -90, 90, -180, 180).collect()
+
+
+def test_tile_build_and_reads_job_counts(spark, tmpdir):
+    """The build and its two writes run a fixed handful of Spark jobs
+    (not a per-level loop) and leave nothing cached once the released()
+    block ends (as job.py run --tiles does), a viewport read over the
+    written tiles runs one, and each level= directory holds at most two
+    files."""
+    from geoparser_spark.plans.caching import released
+
+    def n_cached():
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    pts = _points_df(spark)
+    pts.count()
+    out = os.path.join(tmpdir, "guard")
+    base = n_cached()
+    with _spark_jobs(spark) as build_jobs, released():
+        tiles, extents = build_tile_pyramid(pts)
+        write_tiles(tiles, os.path.join(out, "tiles"))
+        extents.write.mode("overwrite").parquet(os.path.join(out, "extents"))
+        assert n_cached() == base + 1
+    assert len(build_jobs) <= 12, build_jobs
+    assert n_cached() == base
+    t = spark.read.parquet(os.path.join(out, "tiles"))
+    e = spark.read.parquet(os.path.join(out, "extents"))
+    with _spark_jobs(spark) as read_jobs:
+        got = viewport_tiles(t, e, 30, 50, -110, -90).collect()
+    assert got and len(read_jobs) == 1, read_jobs
+    levels = [d for d in os.listdir(os.path.join(out, "tiles")) if d.startswith("level=")]
+    assert len(levels) >= 2
+    for d in levels:
+        files = [f for f in os.listdir(os.path.join(out, "tiles", d))
+                 if f.endswith(".parquet")]
+        assert 1 <= len(files) <= 2, (d, files)
 
 
 def test_tile_sink_partitioned_by_level(spark, tmpdir):

@@ -117,6 +117,19 @@ def test_resumable_stage_resumes(spark, docs, expected):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def test_manifest_schema_matches_written_manifest(spark, docs, tmp_path):
+    """schemas.MANIFEST declares the columns and types that
+    resumable_stage writes (wall_ms is an int column)."""
+    from geoparser_spark.schemas import MANIFEST
+
+    man_dir = str(tmp_path / "manifest")
+    resumable_stage(spark, docs.limit(8), extract, str(tmp_path / "out"),
+                    man_dir, run_id="schema", n_parts=2)
+    written = spark.read.parquet(man_dir).schema
+    assert ([(f.name, f.dataType) for f in written]
+            == [(f.name, f.dataType) for f in MANIFEST])
+
+
 def test_resumable_stage_on_catalog_ref(spark, docs, expected):
     """The same resume protocol against CATALOG TABLE refs: output and
     manifest go through the DataFrameWriterV2 path (overwritePartitions
