@@ -287,7 +287,8 @@ def parse_mp3(raw: bytes) -> tuple[int, int, int, int, list[str]] | None:
     body_end = len(raw)
     if body_end - pos >= 128 and raw[body_end - 128:body_end - 125] == b"TAG":
         v1 = raw[body_end - 128:]
-        for lo, hi in ((3, 33), (33, 63), (63, 93), (97, 125)):
+        # title, artist, album, year, comment
+        for lo, hi in ((3, 33), (33, 63), (63, 93), (93, 97), (97, 125)):
             t = v1[lo:hi].split(b"\x00")[0].decode("latin-1").strip()
             if t:
                 texts.append(t)
@@ -455,12 +456,13 @@ def make_mini_mp3(n_frames: int = 10, sample_rate: int = 44100,
         out += b"ID3\x03\x00\x00" + synch + frames
     out += frame * n_frames
     if id3v1:
-        title, artist, album, comment = (list(id3v1) + [""] * 4)[:4]
+        title, artist, album, comment, year = (list(id3v1) + [""] * 5)[:5]
         tag = bytearray(128)
         tag[0:3] = b"TAG"
         tag[3:33] = title.encode("latin-1")[:30].ljust(30, b"\x00")
         tag[33:63] = artist.encode("latin-1")[:30].ljust(30, b"\x00")
         tag[63:93] = album.encode("latin-1")[:30].ljust(30, b"\x00")
+        tag[93:97] = year.encode("latin-1")[:4].ljust(4, b"\x00")
         tag[97:125] = comment.encode("latin-1")[:28].ljust(28, b"\x00")
         out += bytes(tag)
     return bytes(out)

@@ -2,38 +2,44 @@
 
 Replaces the reference's per-document HTTP chain
 (Django → Tika GeoTopicParser → OpenNLP NER → lucene-geo-gazetteer,
-reference: geoparser_app/views.py:146,357-402, ~0.6 docs/sec) with a
-100% JVM-native Spark plan — zero Python anywhere in this stage:
+reference: geoparser_app/views.py:146,357-402, ~0.6 docs/sec) with one
+Arrow kernel per batch of documents.  ``geotag`` runs
+``surface_index.tag_texts`` over ``doc_texts``: one ``mapInArrow``
+stage that probes a compact gazetteer index (flat numpy arrays built
+once per gazetteer input, shipped with ``addFile``, memory-mapped by
+the workers) and tags each document in one pass over its tokens.  No
+explode, no join, no shuffle; a ``rebalance`` hint sizes the output
+files.
+
+Semantics (the kernel implements them; the JVM operators below spell
+them out as Spark plans and serve as the test oracle and as geobench's
+traced probe):
 
   1. ``build_surface_forms``  gazetteer → (surface, n_tokens, candidate)
-     rows, exploding name/asciiname/alternatenames.  Small (GeoNames is
-     ~12M rows / ~1.2 GB — broadcastable after projection & filtering).
-  2. ``candidate_mentions``   doc text → normalized token array → ONE
-     token-context row per position (token + next two tokens, pure SQL
-     ``transform``/``sequence`` — whole-stage-codegen'd) → **broadcast
-     hash join** keyed on the first surface token, with the full
-     n-gram equality folded into the join condition against the
-     pre-split surface tokens.  Map-only: no shuffle touches the
-     100 TB side, and non-matching positions never allocate a gram
-     string (a per-n-gram explode was 3x the rows and ~3 ms/doc of
-     JVM CPU at bench scale).
-  3. longest-match-wins: an n-gram contained in a strictly longer match
-     at the same spot is dropped ("Pasadena Texas" would otherwise also
-     fire "Pasadena" + "Texas"; with no 2-gram surface both singles
-     survive — reference behavior per README.md:69-82).
-  4. ``resolve_mentions``     admin-hierarchy disambiguation scoring:
-     co-mentioned country (+3) / admin1 (+2), feature-code weight,
-     log10(population)/10 tiebreak; deterministic rank
-     (score DESC, geonameid ASC).  Replaces the reference's naive
-     Lucene top-hit (README.md:69-82 resolves "Texas" to a village in
-     Tabasco, MX — we pin that case both ways in tests).
-  5. ``select_primary``       most-frequent resolved entity per doc is
-     primary — GeoTopicParser's Geographic_NAME vs Optional_NAME{i}
-     contract (reference: README.md:98-115, views.py:98-111).
+     rows: name, asciiname and each alternatename, normalized like
+     document text (``normalize_text``), 1..MAX_NGRAM tokens, one row
+     per (surface, geonameid).
+  2. ``candidate_mentions``   every n-gram (n ≤ MAX_NGRAM) of the
+     normalized document text that equals a surface is a mention;
+     longest-match-wins: a mention contained in a strictly longer one
+     is dropped ("Pasadena Texas" would otherwise also fire "Pasadena"
+     + "Texas"; with no 2-gram surface both singles survive — reference
+     behavior per README.md:69-82).
+  3. ``resolve_mentions``     admin-hierarchy disambiguation scoring:
+     co-mentioned country (+3) / admin1 (+2) among the candidates of
+     the doc's kept mentions, feature-code weight, log10(population+1)/10
+     tiebreak; the winner per mention by (score DESC, geonameid ASC).
+     Replaces the reference's naive Lucene top-hit (README.md:69-82
+     resolves "Texas" to a village in Tabasco, MX — we pin that case
+     both ways in tests).
+  4. ``select_primary``       entities ranked by (mention count DESC,
+     name ASC, geonameid ASC); the first is primary — GeoTopicParser's
+     Geographic_NAME vs Optional_NAME{i} contract (reference:
+     README.md:98-115, views.py:98-111).  Each location carries its
+     entity's best score.  Documents without a mention are dropped.
 
-Determinism discipline: every window/sort orders on explicit data
-columns incl. geonameid; the output locations array is array_sort'ed on
-(rank) — never implicit row order (SURVEY.md §4.2).
+Determinism: every ranking orders on explicit data columns incl.
+geonameid, never on row order (SURVEY.md §4.2).
 """
 
 from __future__ import annotations
@@ -41,18 +47,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# 5 covers GeoNames' long official names ("Islamic Republic of Iran",
-# "United States of America") that the reference's Lucene index matches
-# (reference: README.md:60-85); 3 silently lost their recall.  The
-# token-context join is generic over max_n — the struct just carries
-# two more (usually NULL) token fields per position.
-MAX_NGRAM = 5
-
-# feature-code weights (deterministic class prior)
-_CLASS_WEIGHTS = [
-    ("PCLI", 5.0), ("ADM1", 4.0), ("PPLC", 3.5), ("PPLA", 3.0),
-    ("PPLA2", 2.5), ("PPL", 2.0),
-]
+from geoparser_spark.operators.surface_index import (
+    CLASS_WEIGHTS,
+    MAX_NGRAM,
+    tag_texts,
+)
 
 
 def normalize_text(col: Column) -> Column:
@@ -236,7 +235,7 @@ def candidate_mentions(texts: DataFrame, surfaces: DataFrame,
 
 def _class_weight() -> Column:
     expr: Column = F.lit(1.0)
-    for code, w in reversed(_CLASS_WEIGHTS):
+    for code, w in reversed(CLASS_WEIGHTS):
         expr = F.when(F.col("feature_code") == code, F.lit(w)).otherwise(expr)
     return expr
 
@@ -305,42 +304,14 @@ def select_primary(resolved: DataFrame) -> DataFrame:
 def geotag(extracted: DataFrame, gazetteer: DataFrame,
            max_n: int = MAX_NGRAM,
            broadcast_surfaces: bool | str = True) -> DataFrame:
-    """Full stage: extracted docs → geotagged(doc_id, locations).
+    """Full stage: extracted docs → GEOTAGGED(doc_id, locations).
 
-    locations is array_sort'ed on rank (frequency, name, geonameid) so
-    the array order is reproducible across shuffles/partitionings.
-    ``broadcast_surfaces`` passes through to candidate_mentions
-    (True / False / "auto" — "auto" counts the surface table against
-    BROADCAST_SURFACE_ROW_BUDGET; the count is a gazetteer-grain job
-    run at plan-BUILD time, so leave the default True for tiny test
-    gazetteers and plan-shape assertions)."""
-    texts = doc_texts(extracted)
-    surfaces = build_surface_forms(gazetteer, max_n)
-    cands = candidate_mentions(texts, surfaces, max_n, broadcast_surfaces)
-    primaries = select_primary(resolve_mentions(cands))
-    loc_struct = F.struct(
-        F.col("rank"),
-        F.col("name"), F.col("latitude"), F.col("longitude"),
-        F.col("geonameid"), F.col("is_primary"), F.col("score"),
-    )
-    return (
-        primaries.groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(loc_struct)).alias("locs"))
-        .select(
-            "doc_id",
-            F.transform(
-                "locs",
-                lambda s: F.struct(
-                    s["name"].alias("name"),
-                    s["latitude"].alias("latitude"),
-                    s["longitude"].alias("longitude"),
-                    s["geonameid"].alias("geonameid"),
-                    s["is_primary"].alias("is_primary"),
-                    s["score"].alias("score"),
-                ),
-            ).alias("locations"),
-        )
-    )
+    locations are in rank order (mention count, name, geonameid), the
+    first one primary.  The gazetteer index is built on the first call
+    for a gazetteer input and reused while the input is unchanged.
+    ``broadcast_surfaces`` is unused: the kernel has no join strategy
+    to choose (the parameter stays for callers that pass it)."""
+    return tag_texts(doc_texts(extracted), gazetteer, max_n)
 
 
 def points(geotagged: DataFrame) -> DataFrame:

@@ -3,7 +3,8 @@
 Replaces the reference's hand-rolled batch-state machinery:
   * resume  — ``rows_processed = GetIndexSize(core)`` offset counter
               (reference: geoparser_app/views.py:322-339) becomes a
-              per-partition manifest table + left-anti join.
+              per-partition manifest table; the done partition ids
+              (at most n_parts) filter the input as a literal list.
   * skew    — the reference has none (a mega-document stalls its
               sequential loop, views.py:357); here mega-docs are split
               into chunk rows, processed, and reassembled in order.
@@ -32,6 +33,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 DEFAULT_LOGICAL_PARTS = 256
 
@@ -125,19 +127,22 @@ def with_part_id(df: DataFrame, key: str = "doc_id",
     )
 
 
-def _spans_checksum_col() -> F.Column:
-    # order-insensitive per-partition checksum over (doc_id, span hash)
-    return F.sum(
-        F.xxhash64(F.col("doc_id"), F.to_json(F.struct("spans"))).cast("decimal(38,0)")
-    ).cast("string")
+def _spans_hash_col() -> F.Column:
+    # per-doc span hash; the per-partition checksum is its sum, which
+    # is order-insensitive
+    return F.xxhash64(F.col("doc_id"), F.to_json(F.struct("spans")))
 
 
-def _read_ref(spark: SparkSession, ref: str) -> DataFrame:
+def _read_ref(spark: SparkSession, ref: str,
+              schema: T.StructType | None = None) -> DataFrame:
+    """Read a table ref.  A parquet path read with its known ``schema``
+    skips schema inference, which is a Spark job of its own."""
     from geoparser_spark.sources.catalog import is_catalog_ref, strip_catalog_prefix
 
     if is_catalog_ref(ref):
         return spark.table(strip_catalog_prefix(ref))
-    return spark.read.parquet(ref)
+    reader = spark.read.schema(schema) if schema is not None else spark.read
+    return reader.parquet(ref)
 
 
 def _write_partitioned(df: DataFrame, ref: str) -> None:
@@ -183,16 +188,17 @@ def _append_ref(df: DataFrame, ref: str) -> None:
 
 
 def read_done_parts(spark: SparkSession, manifest_dir: str) -> DataFrame:
-    """Manifest partitions already completed (any run_id — restartable
-    across job submissions, like the reference's resume offset but
-    partition-grained).
+    """Manifest partitions already completed, one row per 'done'
+    manifest row (any run_id — restartable across job submissions, like
+    the reference's resume offset but partition-grained).
 
     Only a manifest that does not exist yet means "nothing done"; every
     other read error raises, so a corrupt or unreadable manifest can
     never silently re-run the whole input."""
     from geoparser_spark.sources.catalog import is_catalog_ref, strip_catalog_prefix
 
-    nothing_done = spark.createDataFrame([], "part_id int")
+    # an empty local relation: collecting it runs no Spark job
+    nothing_done = spark.sql("SELECT CAST(NULL AS INT) AS part_id WHERE false")
     if is_catalog_ref(manifest_dir):
         tbl = strip_catalog_prefix(manifest_dir)
         if not spark.catalog.tableExists(tbl):
@@ -211,11 +217,8 @@ def read_done_parts(spark: SparkSession, manifest_dir: str) -> DataFrame:
         # failing schema inference
         m = spark.read.schema("partition_id int, status string").parquet(
             manifest_dir)
-    return (
-        m.where(F.col("status") == "done")
-        .select(F.col("partition_id").alias("part_id"))
-        .distinct()
-    )
+    return m.where(F.col("status") == "done").select(
+        F.col("partition_id").alias("part_id"))
 
 
 def resumable_stage(
@@ -240,36 +243,46 @@ def resumable_stage(
     manifest_dir = manifest_dir or os.path.join(output_dir + "_manifest")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
+    # at most n_parts ids: filter with a literal list instead of
+    # planning a broadcast anti-join (whose build side is a job of its
+    # own, run by anything that plans `todo`)
+    done = sorted({r.part_id for r in read_done_parts(spark, manifest_dir).collect()})
     docs_p = with_part_id(docs, key, n_parts)
-    done = read_done_parts(spark, manifest_dir)
-    todo = docs_p.join(F.broadcast(done), "part_id", "left_anti")
+    todo = docs_p.where(~F.col("part_id").isin(done)) if done else docs_p
 
-    rows_in = todo.groupBy("part_id").agg(F.count("*").alias("rows_in"))
     t0 = time.monotonic()
     out = with_part_id(stage(todo.drop("part_id")), key, n_parts)
     _write_partitioned(out, output_dir)
     wall_ms = int((time.monotonic() - t0) * 1000)
 
-    written = _read_ref(spark, output_dir).join(
-        todo.select("part_id").distinct(), "part_id", "left_semi"
+    # lineage in one aggregation: the todo rows (rows_in) and the
+    # written rows of the not-done partitions, pruned by directory
+    # (rows_out, checksum); a partition counts once it has both
+    written = _read_ref(spark, output_dir, out.schema)
+    if done:
+        written = written.where(~F.col("part_id").isin(done))
+    lineage = todo.select(
+        "part_id", F.lit(1).alias("_in"), F.lit(None).cast("long").alias("_h")
+    ).unionByName(
+        written.select("part_id", F.lit(0).alias("_in"), _spans_hash_col().alias("_h"))
     )
     manifest = (
-        written.groupBy("part_id")
+        lineage.groupBy("part_id")
         .agg(
-            F.count("*").alias("rows_out"),
-            _spans_checksum_col().alias("checksum"),
+            F.sum("_in").alias("rows_in"),
+            F.count("_h").alias("rows_out"),
+            F.sum(F.col("_h").cast("decimal(38,0)")).cast("string").alias("checksum"),
         )
-        .join(rows_in, "part_id", "left")
+        .where((F.col("rows_in") > 0) & (F.col("rows_out") > 0))
         .select(
             F.lit(run_id).alias("run_id"),
-            "part_id",
+            F.col("part_id").alias("partition_id"),
             F.lit("done").alias("status"),
-            F.coalesce("rows_in", F.lit(0)).alias("rows_in"),
+            "rows_in",
             "rows_out",
             "checksum",
             F.lit(wall_ms).alias("wall_ms"),
         )
-        .withColumnRenamed("part_id", "partition_id")
     )
     _append_ref(manifest, manifest_dir)
-    return _read_ref(spark, output_dir).drop("part_id")
+    return _read_ref(spark, output_dir, out.schema).drop("part_id")

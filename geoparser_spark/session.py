@@ -48,6 +48,10 @@ def get_spark(
         # local mode: one JVM; keep the UI off for headless runs.
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        # the gazetteer index build collects one Arrow row per gazetteer
+        # entry: ~1.3 GB at 12M synthetic GeoNames entries, above the 1g
+        # default (operators/surface_index._build_arrays)
+        .config("spark.driver.maxResultSize", "4g")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

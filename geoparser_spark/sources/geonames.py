@@ -2,11 +2,14 @@
 
 The reference builds a Lucene index over the ~1.2 GB / ~12M row dump
 (reference: README.md:60-66, Docker/Dockerfile:46-48) and queries it
-over HTTP per document.  Here the dump is read as a 19-column TSV,
-projected to the gazetteer schema, and **broadcast** — the tag stage
-then runs shuffle-free (SURVEY.md §4.1 'shuffle avoidance in tag
-stage').  After projection + n-token filtering the broadcast payload is
-a few hundred MB at full GeoNames scale — within executor budgets.
+over HTTP per document.  Here the dump is read as a 19-column TSV and
+projected to the gazetteer schema.  The tag stage reads it once per
+dump version, in one Arrow pass that builds the compact surface index
+(operators/surface_index.py), ships the index files to the workers and
+memory-maps them there; tagging then runs without a join or a shuffle
+(SURVEY.md §4.1 'shuffle avoidance in tag stage').  The index is keyed
+by the reader's input files with their sizes and mtimes, so a new dump
+builds a new index; ``job.py run`` keeps it on disk between runs.
 """
 
 from __future__ import annotations

@@ -2,7 +2,7 @@
 
     spark-submit --py-files geoparser_spark.zip job.py run \
         --input <docs parquet/iceberg dir> --gazetteer <allCountries.tsv> \
-        --output <dir> [--resume] [--tiles]
+        --output <dir> [--index-dir <dir>] [--tiles]
 
 Replaces the reference's multi-service bootstrap (Solr + Tika + Django
 + gazetteer server on fixed ports, Docker/entrypoint-geoparser.sh:16-19)
@@ -19,6 +19,7 @@ import time
 
 from geoparser_spark.operators.extract import extract_with_skew_split
 from geoparser_spark.operators.geotag import geotag, points
+from geoparser_spark.operators.surface_index import INDEX_DIR_CONF
 from geoparser_spark.operators.tiles import build_tile_pyramid, write_tiles
 from geoparser_spark.plans.caching import released
 from geoparser_spark.plans.runtime import resumable_stage
@@ -38,14 +39,10 @@ def main(argv: list[str] | None = None) -> int:
     run.add_argument("--n-logical-parts", type=int, default=256)
     run.add_argument("--tiles", action="store_true")
     run.add_argument(
-        "--surface-broadcast", default="auto",
-        choices=("auto", "always", "never"),
-        help="tag-join strategy for the gazetteer surface table: "
-             "'always' broadcasts, 'never' takes the shuffled "
-             "first-token equi-join, 'auto' (default) counts surfaces "
-             "against geotag.BROADCAST_SURFACE_ROW_BUDGET — the real "
-             "12M-place GeoNames lands on the shuffled path "
-             "(BENCH/GAZETTEER_SCALE.md)")
+        "--index-dir", default=None,
+        help="driver-local directory that keeps the gazetteer index "
+             "between runs (default: <output>/_gazetteer_index when "
+             "--output is a local path)")
     run.add_argument(
         "--redistribute", choices=("mega-only", "all"), default="mega-only",
         help="'mega-only' (default) shuffles only mega-doc chunks; "
@@ -53,7 +50,11 @@ def main(argv: list[str] | None = None) -> int:
              "sources whose own partitioning cannot provide parallelism")
     args = p.parse_args(argv)
 
-    spark = get_spark(app_name="geoparser-job")
+    index_dir = args.index_dir
+    if index_dir is None and "://" not in args.output:
+        index_dir = os.path.join(args.output, "_gazetteer_index")
+    spark = get_spark(app_name="geoparser-job", extra_conf=(
+        {INDEX_DIR_CONF: os.path.abspath(index_dir)} if index_dir else None))
     t0 = time.monotonic()
 
     docs = spark.read.parquet(args.input)
@@ -69,8 +70,7 @@ def main(argv: list[str] | None = None) -> int:
     )
 
     gaz = read_geonames_tsv(spark, args.gazetteer)
-    bc = {"always": True, "never": False}.get(args.surface_broadcast, "auto")
-    tagged = geotag(extracted, gaz, broadcast_surfaces=bc)
+    tagged = geotag(extracted, gaz)
     tagged.write.mode("overwrite").parquet(os.path.join(args.output, "geotagged"))
 
     pts = points(spark.read.parquet(os.path.join(args.output, "geotagged")))

@@ -472,6 +472,18 @@ def test_mp3_id3_tags_in_byte_order():
     assert ("text", "X", None) in spans
 
 
+def test_mp3_id3v1_year_field():
+    """The ID3v1 year (bytes 93-97 of the TAG block) is a text field
+    between album and comment; a year-only tag still yields it."""
+    from geoparser_spark.operators.audio_meta import make_mini_mp3, parse_mp3
+
+    blob = make_mini_mp3(3, id3v1=("Title", "Artist", "Album", "note", "1987"))
+    raw_tag = blob[-128:]
+    assert raw_tag[:3] == b"TAG" and raw_tag[93:97] == b"1987"
+    assert parse_mp3(blob)[4] == ["Title", "Artist", "Album", "1987", "note"]
+    assert parse_mp3(make_mini_mp3(3, id3v1=("", "", "", "", "2001")))[4] == ["2001"]
+
+
 def test_mp3_id3v22_and_unsync_tags():
     from geoparser_spark.operators.audio_meta import (
         _id3v2_texts,

@@ -9,8 +9,6 @@ import math
 import os
 import shutil
 import tempfile
-import uuid
-from contextlib import contextmanager
 
 import numpy as np
 import pytest
@@ -104,21 +102,6 @@ def _digest(rows) -> str:
     return hashlib.sha256(repr(rows).encode()).hexdigest()
 
 
-@contextmanager
-def _spark_jobs(spark):
-    """Collect the ids of the Spark jobs run inside the block."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    ids: list[int] = []
-    sc.setJobGroup(group, group)
-    try:
-        yield ids
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
-
-
 # sha256 over the sorted tile rows (the seven columns above) and the
 # sorted extent rows, captured from the level-at-a-time pyramid build
 # (one Spark pass per level); the one-pass build must reproduce them
@@ -206,7 +189,7 @@ def test_viewport_tiles_exact(spark):
     assert not viewport_tiles(tiles0, extents0, -90, 90, -180, 180).collect()
 
 
-def test_tile_build_and_reads_job_counts(spark, tmpdir):
+def test_tile_build_and_reads_job_counts(spark, spark_jobs, tmpdir):
     """The build and its two writes run a fixed handful of Spark jobs
     (not a per-level loop) and leave nothing cached once the released()
     block ends (as job.py run --tiles does), a viewport read over the
@@ -221,7 +204,7 @@ def test_tile_build_and_reads_job_counts(spark, tmpdir):
     pts.count()
     out = os.path.join(tmpdir, "guard")
     base = n_cached()
-    with _spark_jobs(spark) as build_jobs, released():
+    with spark_jobs() as build_jobs, released():
         tiles, extents = build_tile_pyramid(pts)
         write_tiles(tiles, os.path.join(out, "tiles"))
         extents.write.mode("overwrite").parquet(os.path.join(out, "extents"))
@@ -230,7 +213,7 @@ def test_tile_build_and_reads_job_counts(spark, tmpdir):
     assert n_cached() == base
     t = spark.read.parquet(os.path.join(out, "tiles"))
     e = spark.read.parquet(os.path.join(out, "extents"))
-    with _spark_jobs(spark) as read_jobs:
+    with spark_jobs() as read_jobs:
         got = viewport_tiles(t, e, 30, 50, -110, -90).collect()
     assert got and len(read_jobs) == 1, read_jobs
     levels = [d for d in os.listdir(os.path.join(out, "tiles")) if d.startswith("level=")]

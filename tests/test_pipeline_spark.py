@@ -113,6 +113,15 @@ def test_resumable_stage_resumes(spark, docs, expected):
         assert r2_parts.count() == n_parts - 4
         # final output identical to an uninterrupted run
         _assert_span_equality(out2, expected)
+
+        # a third run over the full input finds every partition done:
+        # it adds no manifest row and the output stays identical
+        n_rows = man.count()
+        out3 = resumable_stage(
+            spark, docs, extract, out_dir, man_dir, run_id="r3", n_parts=n_parts
+        )
+        assert spark.read.parquet(man_dir).count() == n_rows
+        _assert_span_equality(out3, expected)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
