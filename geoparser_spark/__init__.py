@@ -13,8 +13,9 @@ the same dataflow as a single lazy Spark plan over columnar tables:
 Design rules (see SURVEY.md):
   * DataFrame / SQL first; Catalyst does pushdown, pruning, join choice.
   * Python only in Arrow-batched UDF stages (mapInPandas); never per row.
-  * The geotag stage is 100% JVM-native (token n-gram broadcast join).
-  * Gazetteer is broadcast — the tag stage is shuffle-free map work.
+  * The geotag stage is one mapInArrow kernel over a compact gazetteer
+    index, built once per gazetteer input, shipped with addFile and
+    memory-mapped by the workers — no join against the gazetteer.
   * Salted repartition on doc_id defuses mega-document skew.
   * Per-partition lineage manifests make runs checkpoint-resumable.
 """

@@ -10,8 +10,8 @@ container specs — WAV (RIFF/WAVE, the Microsoft/IBM multimedia spec:
 spec: STREAMINFO + VORBIS_COMMENT metadata blocks) and MP3 (ISO/IEC
 11172-3 / 13818-3 frame headers, ID3v1/ID3v2 tags) — with pure stdlib
 parsing.  The PCM/FLAC frame codec itself is NOT needed for any of it
-(WAV samples decode below; FLAC frames decode in
-:mod:`geoparser_spark.operators.flac_codec`).
+(WAV samples decode below, reached only from tests; FLAC frames are
+never decoded).
 
 Span contract for an ``audio_bytes`` input span (base64 payload):
   * one media span ("audio", None, "aud://{fmt}/{rate}Hz/{ch}ch/{ms}ms")
@@ -1144,29 +1144,3 @@ def make_wav_g711(samples: "object", sample_rate: int = 8000,
               + _riff_chunk(b"fact", struct.pack("<I", s.shape[0]))
               + _riff_chunk(b"data", body))
     return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-
-def pcm_features(sample_rate: int, frames: "object",
-                 dim: int = 8) -> list[float]:
-    """(sample_rate, (n, c) int32 16-bit-equivalent samples) -> dim
-    floats, each an INTEGER aggregate + one IEEE division (the audio
-    twin of png_codec.pixel_features, same oracle discipline):
-    [n_frames/2^20, channels/16, rate/192000, mean0, mean-square0,
-    zero-cross ratio0, |peak|0, nonzero ratio0] over channel 0."""
-    import numpy as np
-
-    n, c = frames.shape
-    ch = frames[:, 0].astype(np.int64)
-    feats = [n / 1048576.0, c / 16.0, sample_rate / 192000.0]
-    if n:
-        feats.append(int(ch.sum()) / (n * 32768.0))
-        feats.append(int((ch * ch).sum()) / (n * 32768.0 * 32768.0))
-        sgn = ch >= 0
-        feats.append(int((sgn[1:] != sgn[:-1]).sum()) / n if n > 1 else 0.0)
-        feats.append(int(np.abs(ch).max()) / 32768.0)
-        feats.append(int((ch != 0).sum()) / n)
-    else:
-        feats.extend([0.0] * 5)
-    feats = feats[:dim]
-    feats.extend(0.0 for _ in range(dim - len(feats)))
-    return feats

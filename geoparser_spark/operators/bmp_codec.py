@@ -1,8 +1,7 @@
 """Pure-stdlib BMP pixel codec (Windows BITMAPINFOHEADER): palette,
 RLE and raw-pixel decode.
 
-The FIFTH real pixel path in the sandbox (after PNG, GIF, JPEG and
-TIFF): `decode_bmp` returns an (H, W) uint8 grayscale (when the
+A pixel path next to PNG, JPEG and TIFF: `decode_bmp` returns an (H, W) uint8 grayscale (when the
 palette is grey) or (H, W, 3) uint8 RGB array for the layouts that
 dominate real corpora — uncompressed (BI_RGB) 1/4/8-bit palette,
 24-bit BGR and 32-bit BGRX, plus RLE8/RLE4 (BI_RLE8/BI_RLE4 with
@@ -18,9 +17,8 @@ NotImplementedError (the documented degrade contract); malformed
 streams raise ValueError — never an unguarded numpy/struct error
 that could kill an Arrow task.
 
-Scale note: runs INSIDE Arrow-batched kernels (mapInPandas) —
-embarrassingly parallel per row; the Spark plan around it carries the
-100 TB design.
+No dataflow stage decodes pixels, so this module is reached only from
+tests.
 
 Reference parity: the reference's pixel path is Tika+Tesseract on
 uploaded images (geoparser_app/views.py:125; Docker/Dockerfile:33-36),

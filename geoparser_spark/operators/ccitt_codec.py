@@ -48,7 +48,7 @@ from __future__ import annotations
 
 import numpy as np
 
-_MAX_PIXELS = 64_000_000          # same bomb cap as tiff_codec/gif_codec
+_MAX_PIXELS = 64_000_000          # same bomb cap as tiff_codec
 
 # --------------------------------------------------------------- tables
 # ITU-T T.4 terminating + makeup codes as (run, code, bit-length).

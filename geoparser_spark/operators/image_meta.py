@@ -189,9 +189,9 @@ def parse_tiff(raw: bytes) -> tuple[int, int, list[str]] | None:
 
 
 def parse_bmp(raw: bytes) -> tuple[int, int, list[str]] | None:
-    """BMP dims from the fixed BITMAPINFOHEADER offsets — header-only
-    (the pixel path is operators/bmp_codec); BMP has no standard
-    embedded-text channel, so texts is always empty."""
+    """BMP dims from the fixed BITMAPINFOHEADER offsets — header-only;
+    BMP has no standard embedded-text channel, so texts is always
+    empty."""
     if raw[:2] != b"BM" or len(raw) < 26:
         return None
     w, h = struct.unpack("<ii", raw[18:26])
@@ -368,6 +368,20 @@ def make_mini_gif(width: int, height: int, comments: list[str] = ()) -> bytes:
         out.append(b"\x21\xfe" + sub + b"\x00")
     out.append(b"\x3b")
     return b"".join(out)
+
+
+def make_mini_bmp(width: int, height: int, top_down: bool = False) -> bytes:
+    """Minimal uncompressed 24-bit BMP: BITMAPFILEHEADER +
+    BITMAPINFOHEADER + zeroed rows padded to 4 bytes; ``top_down``
+    stores the height negative, as top-down writers do."""
+    stride = (3 * width + 3) & ~3
+    pixels = bytes(stride * height)
+    info = struct.pack("<IiiHHIIiiII", 40, width,
+                       -height if top_down else height, 1, 24, 0,
+                       len(pixels), 2835, 2835, 0, 0)
+    head = struct.pack("<2sIHHI", b"BM", 14 + len(info) + len(pixels),
+                       0, 0, 14 + len(info))
+    return head + info + pixels
 
 
 # ------------------------------------------------------------- EXIF GPS

@@ -1,11 +1,10 @@
 """Pure-stdlib+numpy baseline JPEG codec (ISO/IEC 10918-1, public spec).
 
-The third REAL pixel path next to png_codec/gif_codec — JPEG is the
+A REAL pixel path, reached only from tests — JPEG is the
 dominant web image format, and the reference hands any image to Tika
 for pixel work (/root/reference/geoparser_app/views.py:125, Tika built
 at Docker/Dockerfile:33-36); this module in-sources the baseline
-sequential decode so ``multimodal.decode_image`` returns real pixels
-for it in-sandbox.
+sequential decode.
 
 Determinism is the design center (VERDICT r4 #3): the spec permits any
 conforming IDCT, and a float IDCT's accumulation order makes pixel

@@ -11,14 +11,11 @@ scatters back on the spec §2.6 grid), at EVERY spec-legal bit depth:
 16-bit samples unfilter at bpp = ch*2 and keep the most-significant
 byte (the spec's own rescale to 8 bits); sub-byte depths 1/2/4
 (grey/palette) unpack MSB-first from ceil(w*d/8)-byte scanlines, grey
-rescaled by the exact integer factor 255/(2^d-1).  GIF and baseline
-JPEG have their own real codecs (operators/gif_codec,
-operators/jpeg_codec).
+rescaled by the exact integer factor 255/(2^d-1).  Baseline JPEG has
+its own codec (operators/jpeg_codec).
 
-Scale note: this runs INSIDE Arrow-batched kernels (mapInPandas), so
-the per-image numpy unfilter is vectorized per scanline; the Spark
-plan around it (partitioning, batch shape) is what carries the 100 TB
-design — the codec itself is embarrassingly parallel per row.
+No dataflow stage decodes pixels, so this module is reached only from
+tests; the per-image numpy unfilter is vectorized per scanline.
 
 Reference parity: the reference's pixel path is Tika+Tesseract OCR on
 uploaded images (geoparser_app/views.py:125; Docker/Dockerfile:33-36);
@@ -215,8 +212,8 @@ def decode_png(raw: bytes) -> np.ndarray:
         if palette is None:
             raise ValueError("palette image without PLTE")
         idx = img[:, :, 0]
-        # mirror gif_codec: a numpy IndexError here would violate the
-        # documented malformed-stream ValueError contract
+        # a numpy IndexError here would violate the documented
+        # malformed-stream ValueError contract
         if idx.size and int(idx.max()) >= len(palette):
             raise ValueError("palette index out of range")
         img = palette[idx]

@@ -62,7 +62,7 @@ TIFF_SIGS = (b"II*\x00", b"MM\x00*")
 #: bit-reversal table for FillOrder 2 (lsb-first bytes, TIFF tag 266)
 _BITREV = bytes(int(f"{i:08b}"[::-1], 2) for i in range(256))
 
-_MAX_PIXELS = 64_000_000          # same bomb cap as gif_codec
+_MAX_PIXELS = 64_000_000          # decompression-bomb cap
 #: BYTE ASCII SHORT LONG RATIONAL UNDEFINED (7 carries JPEGTables)
 _TYPE_SIZE = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8, 7: 1}
 

@@ -52,8 +52,11 @@ _MEMBERS_SCHEMA = (
 
 def dedup_points(points: DataFrame) -> DataFrame:
     """Q7 — unique (lat, lon) before clustering; replaces the numpy
-    view trick at khooshe.py:71-77."""
-    return points.dropDuplicates(["latitude", "longitude"])
+    view trick at khooshe.py:71-77.  Co-located points keep the least
+    ``info`` (NULL read as ''), so the label does not depend on input
+    row order."""
+    return points.groupBy("latitude", "longitude").agg(
+        F.min(F.coalesce(F.col("info"), F.lit(""))).alias("info"))
 
 
 def kmeans_fit(pts: np.ndarray, k: int, iters: int = _LLOYD_ITERS) -> np.ndarray:
@@ -168,10 +171,7 @@ def build_tile_pyramid(
     The membership rows are cached for the two writes that follow
     (``plans.caching.track``); run the build and its writes inside
     ``with released():`` to drop the cache afterwards."""
-    state = dedup_points(points).select(
-        "latitude", "longitude",
-        F.coalesce(F.col("info"), F.lit("")).alias("info"),
-    )
+    state = dedup_points(points)
     # level 0 is one global cluster: fit on a deterministic sample,
     # assign natively — full data never reaches the driver.
     # tie-break the hash key on the coordinates themselves:

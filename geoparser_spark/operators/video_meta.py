@@ -6,8 +6,8 @@ Reference parity: GeoParser routes any upload through Tika auto-detect
 container metadata (duration, frame size, brand) and iTunes-style tags,
 which index like any document field.  This module reproduces that
 surface from the public ISO/IEC 14496-12 (ISO BMFF) box structure with
-pure stdlib parsing — the video codec itself is never touched (frame
-decode stays the documented sandbox stub in operators/multimodal.py).
+pure stdlib parsing — the video codec itself is never touched (no
+frame decode).
 
 Parsed subset:
   * ``ftyp``              — major brand (e.g. isom, mp42)

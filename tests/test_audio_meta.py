@@ -668,28 +668,3 @@ def test_wav_ima_adpcm_validation():
     blob[data_at + 2] = 97
     with pytest.raises(ValueError, match="step index"):
         decode_wav_pcm(bytes(blob))
-
-
-def test_extract_audio_features_operator(spark):
-    import pandas as pd
-
-    from geoparser_spark.operators.audio_meta import (
-        decode_wav_pcm,
-        make_wav_pcm,
-        pcm_features,
-    )
-    from geoparser_spark.operators.multimodal import extract_audio_features
-
-    rng = np.random.default_rng(41)
-    s = rng.integers(-32768, 32768, size=(500, 2)).astype(np.int64)
-    good = make_wav_pcm(s, 16000, 16)
-    sr, frames = decode_wav_pcm(good)
-    expected = pcm_features(sr, frames, 8)
-    df = spark.createDataFrame(pd.DataFrame(
-        {"media_ref": ["good", "bad"],
-         "media_bytes": [good, good[:30]]}))
-    rows = {r.media_ref: r for r in extract_audio_features(df).collect()}
-    assert rows["good"].decode_ok
-    got = [float(x) for x in rows["good"].feature]
-    assert got == pytest.approx([np.float32(v) for v in expected])
-    assert not rows["bad"].decode_ok

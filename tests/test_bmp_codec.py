@@ -246,75 +246,3 @@ def test_decode_totality_on_garbage(raw):
         decode_bmp(b"BM" + raw)
     except (ValueError, NotImplementedError):
         pass
-
-
-def test_decode_image_routes_bmp(spark):
-    from geoparser_spark.operators.multimodal import decode_image
-
-    img = _gray(10, 14, seed=23)
-    out = decode_image(encode_bmp(img, bpp=8))
-    assert np.array_equal(out, img)
-
-
-def test_media_features_real_bmp_path(spark):
-    """extract_media_features: BMP joins the real pixel path
-    (decode_ok=True, integer-exact stats); a damaged BMP degrades."""
-    import pandas as pd
-
-    from geoparser_spark.operators.multimodal import extract_media_features
-    from geoparser_spark.operators.png_codec import pixel_features
-
-    rng = np.random.default_rng(29)
-    img = rng.integers(0, 256, size=(14, 9, 3)).astype(np.uint8)
-    good = encode_bmp(img, bpp=24)
-    expected = pixel_features(img, 16)
-    bad = good[:25]
-    df = spark.createDataFrame(
-        pd.DataFrame({"media_ref": ["good", "bad"],
-                      "media_bytes": [good, bad]}))
-    rows = {r.media_ref: r for r in extract_media_features(df).collect()}
-    assert rows["good"].decode_ok
-    got = [float(x) for x in rows["good"].feature]
-    assert got == pytest.approx([np.float32(v) for v in expected])
-    assert not rows["bad"].decode_ok
-
-
-def test_parse_webp_dims_all_three_chunk_kinds():
-    """image_meta's header-only WebP branch: lossy VP8, lossless VP8L
-    and extended VP8X dims all parse; garbage after 'RIFF....WEBP'
-    returns None rather than raising."""
-    import struct as st_
-
-    from geoparser_spark.operators.image_meta import (
-        parse_image_meta,
-        parse_webp,
-    )
-
-    def riff(fourcc, body):
-        pad = b"\x00" if len(body) % 2 else b""
-        chunk = fourcc + st_.pack("<I", len(body)) + body + pad
-        return b"RIFF" + st_.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
-
-    vp8 = riff(b"VP8 ", b"\x00\x00\x00\x9d\x01\x2a"
-               + st_.pack("<HH", 320, 240) + b"\x00" * 4)
-    assert parse_image_meta(vp8) == ("webp", 320, 240, [])
-    bits = (99 & 0x3FFF) | ((49 & 0x3FFF) << 14)
-    vp8l = riff(b"VP8L", bytes([0x2F]) + st_.pack("<I", bits))
-    assert parse_webp(vp8l) == (100, 50, [])
-    vp8x = riff(b"VP8X", b"\x00\x00\x00\x00"
-                + (639).to_bytes(3, "little") + (479).to_bytes(3, "little"))
-    assert parse_webp(vp8x) == (640, 480, [])
-    assert parse_webp(b"RIFF\x04\x00\x00\x00WAVE") is None
-    assert parse_webp(b"RIFF\x10\x00\x00\x00WEBPJUNK\x00\x00\x00\x00") is None
-
-
-def test_parse_bmp_meta_matches_pixel_surface():
-    """parse_image_meta recognizes BMP with the same dims the pixel
-    codec decodes, so the metadata and pixel surfaces agree."""
-    from geoparser_spark.operators.image_meta import parse_image_meta
-
-    img = _gray(7, 5, seed=31)
-    blob = encode_bmp(img, bpp=8)
-    assert parse_image_meta(blob) == ("bmp", 5, 7, [])
-    top = encode_bmp(img, bpp=8, top_down=True)   # negative height
-    assert parse_image_meta(top) == ("bmp", 5, 7, [])

@@ -153,19 +153,17 @@ def test_tiff_level_guards():
         encode_tiff(img, compression=4, bits=1, predictor=2)
 
 
-def test_multimodal_degrade_and_decode_ok():
-    """A G4 TIFF decodes for real through the multimodal guard; a
-    corrupted one degrades to the stub path instead of killing the
-    kernel."""
-    from geoparser_spark.operators.multimodal import (_DEGRADE_ERRORS,
-                                                      decode_image)
+def test_g4_tiff_decode_and_degrade():
+    """A G4 TIFF decodes for real; a truncated one raises inside the
+    ValueError/NotImplementedError degrade contract instead of an
+    unguarded error."""
     img = _speckle(12, 30, seed=47)
     blob = encode_tiff(img, compression=4, photometric=0, bits=1)
-    px = decode_image(blob)
+    px = decode_tiff(blob)
     assert set(np.unique(px)) <= {0, 255}
     bad = blob[:40]
-    with pytest.raises(_DEGRADE_ERRORS):
-        decode_image(bad)
+    with pytest.raises((ValueError, NotImplementedError)):
+        decode_tiff(bad)
 
 
 @settings(max_examples=40, deadline=None)

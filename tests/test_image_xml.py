@@ -12,10 +12,12 @@ from geoparser_spark.operators.extract import extract_doc_spans_cols
 from geoparser_spark.operators.image_meta import (
     extract_image_b64_spans,
     extract_image_spans,
+    make_mini_bmp,
     make_mini_gif,
     make_mini_jpeg,
     make_mini_png,
     parse_image_meta,
+    parse_webp,
 )
 from geoparser_spark.operators.xml_text import (
     extract_xml_text_blocks,
@@ -133,6 +135,38 @@ def test_image_dims_roundtrip(w, h, fmt):
         raw = make_mini_gif(w, h)
     got = parse_image_meta(raw)
     assert got is not None and (got[0], got[1], got[2]) == (fmt, w, h)
+
+
+def test_parse_webp_dims_all_three_chunk_kinds():
+    """image_meta's header-only WebP branch: lossy VP8, lossless VP8L
+    and extended VP8X dims all parse; garbage after 'RIFF....WEBP'
+    returns None rather than raising."""
+
+    def riff(fourcc, body):
+        pad = b"\x00" if len(body) % 2 else b""
+        chunk = fourcc + struct.pack("<I", len(body)) + body + pad
+        return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
+
+    vp8 = riff(b"VP8 ", b"\x00\x00\x00\x9d\x01\x2a"
+               + struct.pack("<HH", 320, 240) + b"\x00" * 4)
+    assert parse_image_meta(vp8) == ("webp", 320, 240, [])
+    bits = (99 & 0x3FFF) | ((49 & 0x3FFF) << 14)
+    vp8l = riff(b"VP8L", bytes([0x2F]) + struct.pack("<I", bits))
+    assert parse_webp(vp8l) == (100, 50, [])
+    vp8x = riff(b"VP8X", b"\x00\x00\x00\x00"
+                + (639).to_bytes(3, "little") + (479).to_bytes(3, "little"))
+    assert parse_webp(vp8x) == (640, 480, [])
+    assert parse_webp(b"RIFF\x04\x00\x00\x00WAVE") is None
+    assert parse_webp(b"RIFF\x10\x00\x00\x00WEBPJUNK\x00\x00\x00\x00") is None
+
+
+def test_parse_bmp_meta_dims_both_row_orders():
+    """parse_image_meta reads BMP dims from the info header, bottom-up
+    and top-down (negative height) alike."""
+    assert parse_image_meta(make_mini_bmp(5, 7)) == ("bmp", 5, 7, [])
+    top = make_mini_bmp(5, 7, top_down=True)
+    assert struct.unpack("<i", top[22:26]) == (-7,)
+    assert parse_image_meta(top) == ("bmp", 5, 7, [])
 
 
 def test_image_and_xml_kinds_through_extract_dispatch():
@@ -350,21 +384,3 @@ def test_exif_gps_never_throws(raw):
     from geoparser_spark.operators.image_meta import parse_exif_gps
 
     parse_exif_gps(b"\xff\xd8\xff\xe1" + raw)
-
-
-def test_extract_image_gps_spark_operator(spark):
-    from geoparser_spark.operators.image_meta import make_mini_jpeg
-    from geoparser_spark.operators.multimodal import extract_image_gps
-
-    rows = [
-        ("with", make_mini_jpeg(2, 2, gps=((10, 30, 0.0), (20, 0, 0.0),
-                                           False, False))),
-        ("without", make_mini_jpeg(2, 2)),
-        ("junk", b"junk"),
-    ]
-    df = spark.createDataFrame(rows, "media_ref string, media_bytes binary")
-    got = {r.media_ref: r for r in extract_image_gps(df).collect()}
-    assert got["with"].has_gps and abs(got["with"].latitude - 10.5) < 1e-9
-    assert abs(got["with"].longitude - 20.0) < 1e-9
-    assert not got["without"].has_gps and got["without"].latitude is None
-    assert not got["junk"].has_gps

@@ -1,9 +1,8 @@
 """JPEG codec: coefficient-exact decode, integer-IDCT determinism,
 round-trips, sampling geometry, restart markers, degrade contract.
 
-The exactness discipline mirrors test_png_codec/test_gif_codec: the
-entropy layer is lossless, so encoding a QUANTIZED COEFFICIENT pattern
-and decoding must land exactly IDCT(pattern) — any defect in marker
+The entropy layer is lossless, so encoding a QUANTIZED COEFFICIENT
+pattern and decoding must land exactly IDCT(pattern) — any defect in marker
 parsing, Huffman tables, bit unstuffing, zigzag, dequant or the
 fixed-point IDCT breaks bit equality.
 """
@@ -17,7 +16,6 @@ import numpy as np
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import Row
 
 from geoparser_spark.operators.jpeg_codec import (
     FLAT_Q,
@@ -164,45 +162,6 @@ def test_decode_totality_on_garbage(raw):
         pass
 
 
-def test_decode_image_routes_jpeg(spark):
-    from geoparser_spark.operators.multimodal import decode_image
-
-    img0 = ((np.arange(16)[:, None] + np.arange(16)[None, :] * 5)
-            % 256).astype(np.uint8)
-    out = decode_image(encode_jpeg_gray(img0))
-    assert out.shape == (16, 16)
-    assert np.abs(out.astype(int) - img0.astype(int)).max() <= 2
-
-
-def test_media_features_real_jpeg_path(spark):
-    """extract_media_features: a coefficient-space JPEG fixture decodes
-    to REAL pixels (decode_ok=True) with integer-exact stats; a damaged
-    JPEG and a TRUNCATED SOF2 header (missing component list — valid
-    progressive streams now take the real-decode path, pinned by
-    test_progressive_*; only malformed ones degrade) both degrade to
-    the stub path."""
-    import pandas as pd
-
-    from geoparser_spark.operators.multimodal import extract_media_features
-    from geoparser_spark.operators.png_codec import pixel_features
-
-    grid = np.arange(64, dtype=np.int64).reshape(1, 1, 8, 8) % 17 - 8
-    good = encode_jpeg_coeffs([grid], 8, 8)
-    expected = pixel_features(_assemble(grid), 16)
-    bad = good[:40] + b"\x00" * 10
-    trunc_sof2 = (bytes([0xFF, 0xD8, 0xFF, 0xC2]) + struct.pack(">H", 8)
-                  + b"\x08\x00\x08\x00\x08\x01")
-    df = spark.createDataFrame(
-        pd.DataFrame({"media_ref": ["good", "bad", "trunc_sof2"],
-                      "media_bytes": [good, bad, trunc_sof2]}))
-    rows = {r.media_ref: r for r in extract_media_features(df).collect()}
-    assert rows["good"].decode_ok
-    got = [float(x) for x in rows["good"].feature]
-    assert got == pytest.approx([np.float32(v) for v in expected])
-    assert not rows["bad"].decode_ok
-    assert not rows["trunc_sof2"].decode_ok
-
-
 def _rand_grids(rng, nc, mcus_x, mcus_y, samplings, lo=-40, hi=40):
     grids = []
     for ci in range(nc):
@@ -315,26 +274,6 @@ def test_progressive_sparse_blocks_exercise_eob_runs():
     assert np.array_equal(base, prog)
 
 
-def test_progressive_routes_through_multimodal(spark):
-    from geoparser_spark.operators.jpeg_codec import (
-        FLAT_Q,
-        encode_jpeg_coeffs_progressive,
-    )
-    from geoparser_spark.operators.multimodal import extract_media_features
-    from geoparser_spark.operators.png_codec import pixel_features
-
-    rng = np.random.default_rng(53)
-    grids = _rand_grids(rng, 1, 2, 1, [(1, 1)])
-    payload = encode_jpeg_coeffs_progressive(grids, 8, 16, qtables=[FLAT_Q])
-    img = decode_jpeg(payload)
-    rows = [Row(media_ref="pjpeg", media_bytes=bytearray(payload))]
-    got = extract_media_features(
-        spark.createDataFrame(rows), dim=16).collect()[0]
-    assert got.decode_ok is True
-    expect = pixel_features(img[:, :, None] if img.ndim == 2 else img, 16)
-    assert got.feature == pytest.approx([np.float32(x) for x in expect])
-
-
 def test_progressive_truncated_is_valueerror():
     from geoparser_spark.operators.jpeg_codec import (
         encode_jpeg_coeffs_progressive,
@@ -353,8 +292,8 @@ def test_progressive_truncated_is_valueerror():
 def test_dc_category_above_11_is_valueerror_not_overflow():
     """A malicious DHT can map a code to any HUFFVAL byte (e.g. 100);
     reader.receive(100) then builds a >64-bit Python int and storing it
-    in the int64 grid raised OverflowError — escaping both decode_jpeg's
-    ValueError contract and multimodal's degrade guard.  F.1.2.1.1 caps
+    in the int64 grid raised OverflowError — escaping decode_jpeg's
+    ValueError degrade contract.  F.1.2.1.1 caps
     8-bit DC categories at 11; reject beyond it at both decode sites."""
     from geoparser_spark.operators.jpeg_codec import (
         _dht_seg, _dqt_seg, _seg, SOF0, SOF2, SOS,

@@ -1,5 +1,5 @@
 """Operator-family tests: tiles, dedup, similarity, text analysis,
-multimodal plumbing, serving ops, geonames source, table sinks, BM25.
+serving ops, geonames source, table sinks, BM25.
 """
 
 from __future__ import annotations
@@ -19,10 +19,6 @@ from geoparser_spark.operators import dedup as D
 from geoparser_spark.operators import serve
 from geoparser_spark.operators import similarity as S
 from geoparser_spark.operators import text_quality as TQ
-from geoparser_spark.operators.multimodal import (
-    extract_media_features,
-    frame_sample_plan,
-)
 from geoparser_spark.operators.tiles import (
     build_tile_pyramid,
     dedup_points,
@@ -239,10 +235,25 @@ def test_tile_sink_partitioned_by_level(spark, tmpdir):
 
 def test_dedup_points(spark):
     df = spark.createDataFrame(
-        [Row(latitude=1.0, longitude=2.0), Row(latitude=1.0, longitude=2.0),
-         Row(latitude=3.0, longitude=4.0)]
+        [Row(latitude=1.0, longitude=2.0, info="a"),
+         Row(latitude=1.0, longitude=2.0, info="a"),
+         Row(latitude=3.0, longitude=4.0, info=None)]
     )
     assert dedup_points(df).count() == 2
+    # co-located points with different labels keep the least one, so
+    # the same rows in another order give the same pyramid bit for bit
+    rows = _points_df(spark, n=40).collect() + [
+        Row(latitude=48.0, longitude=12.0, info="Loria Aval"),
+        Row(latitude=48.0, longitude=12.0, info="Avaloria"),
+    ]
+    digests = set()
+    for order in (rows, rows[::-1]):
+        tiles, _ = build_tile_pyramid(
+            spark.createDataFrame(order).coalesce(1), k=4, leaf_max=10)
+        got = _rows(tiles, _TILE_COLS)
+        assert {r[5] for r in got if r[6] and r[2:4] == (48.0, 12.0)} == {"Avaloria"}
+        digests.add(_digest(got))
+    assert len(digests) == 1
 
 
 # ------------------------------------------------------------- dedup
@@ -505,38 +516,6 @@ def test_fingerprint_stability(spark):
     assert got[1].md5_fp != got[3].md5_fp
 
 
-# --------------------------------------------------------- multimodal
-
-def test_media_features_deterministic_and_shaped(spark):
-    rows = [
-        Row(media_ref="m1", media_bytes=b"\x01\x02\x03"),
-        Row(media_ref="m2", media_bytes=b"\x01\x02\x03"),
-        Row(media_ref="m3", media_bytes=None),
-    ]
-    df = spark.createDataFrame(rows)
-    got = {r.media_ref: r for r in extract_media_features(df, dim=16).collect()}
-    assert len(got["m1"].feature) == 16
-    assert got["m1"].feature == got["m2"].feature  # same bytes -> same feature
-    assert got["m3"].decode_ok is False
-    n = math.sqrt(sum(x * x for x in got["m1"].feature))
-    assert n == pytest.approx(1.0, abs=1e-5)
-
-
-def test_frame_sample_plan(spark):
-    df = spark.createDataFrame(
-        [
-            Row(media_ref="v1", media_meta=Row(mime="video/mp4", width=10, height=10, duration_ms=3500)),
-            Row(media_ref="v2", media_meta=Row(mime="video/mp4", width=10, height=10, duration_ms=500)),
-        ]
-    )
-    got = frame_sample_plan(df, every_ms=1000).collect()
-    per = {}
-    for r in got:
-        per.setdefault(r.media_ref, []).append((r.frame_idx, r.ts_ms))
-    assert sorted(per["v1"]) == [(0, 0), (1, 1000), (2, 2000)]
-    assert sorted(per["v2"]) == [(0, 0)]  # at least one frame
-
-
 # ------------------------------------------------------- serving ops
 
 def test_serve_search_points(spark):
@@ -756,91 +735,6 @@ def test_catalog_v2_writer_call_pattern(spark, monkeypatch):
     fail_next["v"] = True
     C.write_table(df, "cat.db.t3", mode="append")
     assert ("create", "cat.db.t3") in calls
-
-
-def test_resize_images_box_fit(spark):
-    from geoparser_spark.operators.multimodal import resize_images
-
-    schema = ("media_ref string, media_bytes binary, "
-              "media_meta struct<mime:string,width:int,height:int,duration_ms:int>")
-    rows = [
-        ("big", b"x" * 100, ("image/png", 1024, 512, None)),
-        ("small", b"y" * 10, ("image/png", 100, 50, None)),
-    ]
-    df = spark.createDataFrame(rows, schema)
-    got = {r.media_ref: r for r in resize_images(df, 256, 256).collect()}
-    # aspect preserved, fits in the box, never upscaled
-    assert (got["big"].width, got["big"].height) == (256, 128)
-    assert got["big"].resized is True
-    assert (got["small"].width, got["small"].height) == (100, 50)
-    assert got["small"].resized is False
-    assert got["big"].media_bytes.startswith(b"RSZ:256x128:")
-
-
-def test_extract_media_meta_real_headers_and_degrade(spark):
-    from geoparser_spark.operators.image_meta import make_mini_jpeg, make_mini_png
-    from geoparser_spark.operators.multimodal import extract_media_meta
-
-    rows = [
-        ("p", make_mini_png(6, 2, ["cap a", "cap b"])),
-        ("j", make_mini_jpeg(3, 9)),
-        ("bad", b"not an image"),
-        ("empty", b""),
-    ]
-    df = spark.createDataFrame(rows, "media_ref string, media_bytes binary")
-    got = {r.media_ref: r for r in extract_media_meta(df).collect()}
-    assert (got["p"].mime, got["p"].width, got["p"].height, got["p"].n_texts,
-            got["p"].decode_ok) == ("image/png", 6, 2, 2, True)
-    assert (got["j"].mime, got["j"].width, got["j"].height,
-            got["j"].n_texts) == ("image/jpeg", 3, 9, 0)
-    for k in ("bad", "empty"):
-        assert got[k].decode_ok is False and got[k].mime is None
-        assert got[k].width is None and got[k].n_texts is None
-
-
-def test_extract_audio_meta_real_headers_and_degrade(spark):
-    from geoparser_spark.operators.audio_meta import make_mini_flac, make_mini_wav
-    from geoparser_spark.operators.multimodal import extract_audio_meta
-
-    rows = [
-        ("w", make_mini_wav(44100, 2, 16, 22050, comments=["c1"])),
-        ("f", make_mini_flac(48000, 1, 16, 96000)),
-        ("bad", b"not audio"),
-        ("empty", b""),
-    ]
-    df = spark.createDataFrame(rows, "media_ref string, media_bytes binary")
-    got = {r.media_ref: r for r in extract_audio_meta(df).collect()}
-    w = got["w"]
-    assert (w.mime, w.sample_rate, w.channels, w.bits, w.duration_ms,
-            w.n_texts, w.decode_ok) == ("audio/x-wav", 44100, 2, 16, 500, 1, True)
-    f = got["f"]
-    assert (f.mime, f.sample_rate, f.channels, f.duration_ms,
-            f.n_texts) == ("audio/flac", 48000, 1, 2000, 0)
-    for k in ("bad", "empty"):
-        assert got[k].decode_ok is False and got[k].mime is None
-        assert got[k].sample_rate is None and got[k].duration_ms is None
-
-
-def test_clip_sample_plan_truncation_and_zero_duration(spark):
-    from geoparser_spark.operators.multimodal import clip_sample_plan
-
-    df = spark.createDataFrame(
-        [("a", ("audio/x-wav", 12_001)), ("z", ("audio/x-wav", 0)),
-         ("e", ("audio/x-wav", 10_000))],
-        "media_ref string, media_meta struct<mime:string,duration_ms:int>",
-    )
-    got = {(r.media_ref, r.clip_idx): (r.start_ms, r.end_ms)
-           for r in clip_sample_plan(df, clip_ms=5000).collect()}
-    # 12,001 ms -> 3 clips, last truncated
-    assert got[("a", 0)] == (0, 5000)
-    assert got[("a", 1)] == (5000, 10000)
-    assert got[("a", 2)] == (10000, 12001)
-    # exact multiple -> exactly 2 clips, no empty tail clip
-    assert got[("e", 1)] == (5000, 10000)
-    assert ("e", 2) not in got
-    # zero duration -> one empty probe clip
-    assert got[("z", 0)] == (0, 0)
-    assert len(got) == 6
 
 
 # ----------------------------------------------------------------- BM25

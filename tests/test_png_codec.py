@@ -1,8 +1,6 @@
 """Pure-stdlib PNG codec (operators/png_codec): decode/encode
 round-trips across color types and ALL five scanline filters, the
-nearest-neighbor resample, the integer-exact pixel features, and the
-real-pixel paths wired through multimodal.extract_media_features /
-resize_images."""
+nearest-neighbor resample and the integer-exact pixel features."""
 
 from __future__ import annotations
 
@@ -13,7 +11,6 @@ import numpy as np
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import Row
 
 from geoparser_spark.operators.png_codec import (
     PNG_SIG,
@@ -92,8 +89,7 @@ def test_palette_expands_to_rgb():
 
 def test_palette_index_out_of_range_is_valueerror():
     """ADVICE r4: indices past the PLTE length must raise the
-    documented ValueError, not a numpy IndexError (gif_codec already
-    bounds-checks; mirror it)."""
+    documented ValueError, not a numpy IndexError."""
     pal = bytes([255, 0, 0, 0, 255, 0])  # only 2 entries
     rows = b"\x00" + bytes([0, 1, 5])    # index 5 out of range
     png = (PNG_SIG
@@ -272,36 +268,6 @@ def test_pixel_features_integer_exact():
     assert hist[(100 * 8) // 256] == 1.0
 
 
-def test_media_features_real_png_path(spark):
-    from geoparser_spark.operators.multimodal import extract_media_features
-
-    img = np.arange(12, dtype=np.uint8).reshape(3, 4)
-    rows = [
-        Row(media_ref="png", media_bytes=bytearray(encode_png(img))),
-        Row(media_ref="txt", media_bytes=b"just text"),
-    ]
-    got = {r.media_ref: r for r in extract_media_features(
-        spark.createDataFrame(rows), dim=16).collect()}
-    assert got["png"].decode_ok is True
-    assert got["txt"].decode_ok is False
-    expect = pixel_features(img[:, :, None], 16)
-    assert got["png"].feature == pytest.approx(
-        [np.float32(x) for x in expect])
-
-
-def test_resize_images_real_png_roundtrip(spark):
-    from geoparser_spark.operators.multimodal import resize_images
-
-    img = np.arange(64, dtype=np.uint8).reshape(8, 8)
-    rows = [Row(media_ref="p", media_bytes=bytearray(encode_png(img)),
-                media_meta={"width": 8, "height": 8})]
-    got = resize_images(spark.createDataFrame(rows), max_w=4,
-                        max_h=4).collect()[0]
-    assert (got.width, got.height, got.resized) == (4, 4, True)
-    back = decode_png(bytes(got.media_bytes))
-    assert np.array_equal(back, resize_nearest(img[:, :, None], 4, 4))
-
-
 def test_grey_alpha_roundtrip():
     rng = np.random.default_rng(3)
     img = rng.integers(0, 256, size=(4, 5, 2), dtype=np.uint8)
@@ -328,36 +294,6 @@ def test_zero_width_png_features_no_crash():
     assert len(f) == 16 and f[1] == 3 / 4096.0
 
 
-def test_damaged_png_degrades_to_stub(spark):
-    """Corrupt IDAT (zlib.error) and oversize palette index
-    (IndexError) must fall back to the stub path with
-    decode_ok=False, never kill the Arrow task."""
-    from geoparser_spark.operators.multimodal import (
-        extract_media_features,
-        resize_images,
-    )
-
-    good = encode_png(np.arange(12, dtype=np.uint8).reshape(3, 4))
-    corrupt = good[:40] + b"\xff\x00\xde\xad" + good[44:]
-    pal_bad = (PNG_SIG
-               + _chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 1, 8, 3,
-                                             0, 0, 0))
-               + _chunk(b"PLTE", bytes([255, 0, 0]))
-               + _chunk(b"IDAT", zlib.compress(b"\x00\x00\x09"))
-               + _chunk(b"IEND", b""))
-    rows = [Row(media_ref="c", media_bytes=bytearray(corrupt)),
-            Row(media_ref="p", media_bytes=bytearray(pal_bad))]
-    got = {r.media_ref: r for r in extract_media_features(
-        spark.createDataFrame(rows), dim=16).collect()}
-    assert got["c"].decode_ok is False
-    assert got["p"].decode_ok is False
-    rows2 = [Row(media_ref="c", media_bytes=bytearray(corrupt),
-                 media_meta={"width": 4, "height": 3})]
-    r2 = resize_images(spark.createDataFrame(rows2), max_w=2,
-                       max_h=2).collect()[0]
-    assert bytes(r2.media_bytes).startswith(b"RSZ:")  # stub fallback
-
-
 @given(st.integers(1, 20), st.integers(1, 20), st.integers(1, 4),
        st.booleans(), st.integers(0, 2**32 - 1))
 @settings(max_examples=60, deadline=None)
@@ -368,15 +304,3 @@ def test_roundtrip_property_including_adam7(h, w, c, interlace, seed):
     img = rng.integers(0, 256, size=(h, w, c), dtype=np.uint8)
     assert np.array_equal(
         decode_png(encode_png(img, interlace=interlace)), img)
-
-
-def test_resize_images_grey_alpha_real(spark):
-    from geoparser_spark.operators.multimodal import resize_images
-
-    img = np.arange(32, dtype=np.uint8).reshape(4, 4, 2)
-    rows = [Row(media_ref="ga", media_bytes=bytearray(encode_png(img)),
-                media_meta={"width": 4, "height": 4})]
-    got = resize_images(spark.createDataFrame(rows), max_w=2,
-                        max_h=2).collect()[0]
-    back = decode_png(bytes(got.media_bytes))
-    assert np.array_equal(back, resize_nearest(img, 2, 2))

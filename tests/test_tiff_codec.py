@@ -3,7 +3,7 @@ photometrics, strip layouts and byte orders; degrade contract.
 
 The entropy/packing layers are all lossless, so every encode→decode
 must be BIT-IDENTICAL to the input pixels — the same exactness
-discipline as test_png_codec / test_gif_codec / test_jpeg_codec.
+discipline as test_jpeg_codec.
 """
 
 from __future__ import annotations
@@ -315,38 +315,6 @@ def test_decode_totality_on_garbage(raw, sig):
         pass
 
 
-def test_decode_image_routes_tiff(spark):
-    from geoparser_spark.operators.multimodal import decode_image
-
-    img = _gray(12, 18, seed=43)
-    out = decode_image(encode_tiff(img, compression=32773))
-    assert np.array_equal(out, img)
-
-
-def test_media_features_real_tiff_path(spark):
-    """extract_media_features: TIFF joins PNG/GIF/JPEG on the REAL
-    pixel path (decode_ok=True, integer-exact stats); a damaged TIFF
-    degrades to the stub."""
-    import pandas as pd
-
-    from geoparser_spark.operators.multimodal import extract_media_features
-    from geoparser_spark.operators.png_codec import pixel_features
-
-    rng = np.random.default_rng(47)
-    img = rng.integers(0, 256, size=(20, 15, 3)).astype(np.uint8)
-    good = encode_tiff(img, compression=5, predictor=2)
-    expected = pixel_features(img, 16)
-    bad = good[:30] + b"\x00" * 8
-    df = spark.createDataFrame(
-        pd.DataFrame({"media_ref": ["good", "bad"],
-                      "media_bytes": [good, bad]}))
-    rows = {r.media_ref: r for r in extract_media_features(df).collect()}
-    assert rows["good"].decode_ok
-    got = [float(x) for x in rows["good"].feature]
-    assert got == pytest.approx([np.float32(v) for v in expected])
-    assert not rows["bad"].decode_ok
-
-
 def test_parse_tiff_meta_dims_and_description():
     """image_meta's header-only TIFF branch: dims from the first IFD;
     ImageDescription (270) surfaces as embedded text."""
@@ -475,13 +443,9 @@ def test_jpeg_in_tiff_decodes_real_pixels():
 
 
 def test_jpeg_in_tiff_guards():
-    from geoparser_spark.operators.multimodal import decode_image
-
     rng = np.random.default_rng(71)
     img = rng.integers(0, 256, size=(12, 20)).astype(np.uint8)
     blob = encode_tiff(img, compression=7)
-    # routes through the multimodal guard as a real decode
-    assert np.array_equal(decode_image(blob), decode_tiff(blob))
     # truncated strip data degrades as ValueError
     with pytest.raises(ValueError):
         decode_tiff(blob[: len(blob) - 40])

@@ -114,32 +114,6 @@ def test_sample_table_degrade_contract():
         parse_sample_table(blob[: len(blob) - 30])   # truncated stbl
 
 
-def test_plan_video_samples_operator(spark):
-    import pandas as pd
-
-    from geoparser_spark.operators.multimodal import plan_video_samples
-    from geoparser_spark.operators.video_meta import make_mini_mp4_samples
-
-    sizes = [50, 60, 70, 80]
-    good = make_mini_mp4_samples(sizes, delta_units=100, sync_every=2)
-    df = spark.createDataFrame(pd.DataFrame(
-        {"media_ref": ["good", "junk"],
-         "media_bytes": [good, b"\x00" * 40]}))
-    rows = plan_video_samples(df).collect()
-    by = {(r.media_ref, r.sample_idx): r for r in rows}
-    off = 28
-    for k, sz in enumerate(sizes):
-        r = by[("good", k)]
-        assert (r.byte_offset, r.byte_size, r.dts_ms) == (off, sz, k * 100)
-        assert r.is_sync == (k % 2 == 0) and r.decode_ok
-        off += sz
-    assert by[("junk", 0)].decode_ok is False
-    # keyframe-only plan
-    syncs = plan_video_samples(df, sync_only=True).collect()
-    assert {(r.media_ref, r.sample_idx) for r in syncs
-            if r.media_ref == "good"} == {("good", 0), ("good", 2)}
-
-
 def test_sample_table_rejects_out_of_stream_ranges_and_bad_stts():
     """Corrupt tables degrade instead of emitting a poisoned fetch
     plan: a byte range past EOF and an stts over-covering stsz both
@@ -164,22 +138,3 @@ def test_sample_table_rejects_out_of_stream_ranges_and_bad_stts():
     blob2[j + 12:j + 16] = st_.pack(">I", 99)
     with _pytest.raises(ValueError, match="more samples"):
         parse_sample_table(bytes(blob2))
-
-
-def test_plan_operator_empty_plan_keeps_media_ref(spark):
-    """A valid table with zero rows after filtering still yields one
-    accounting row (sample_idx=-1, decode_ok=True)."""
-    import pandas as pd
-
-    from geoparser_spark.operators.multimodal import plan_video_samples
-    from geoparser_spark.operators.video_meta import make_mini_mp4_samples
-
-    # stss marks only sample 1 sync; sync_only over a 1-sample stream
-    # whose single sample IS sync -> row; empty case: zero samples
-    empty = make_mini_mp4_samples([])
-    df = spark.createDataFrame(pd.DataFrame(
-        {"media_ref": ["empty"], "media_bytes": [empty]}))
-    rows = plan_video_samples(df).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r.sample_idx, r.decode_ok) == (-1, True)
