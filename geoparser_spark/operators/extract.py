@@ -8,9 +8,11 @@ the Python worker, the worker parses a whole batch, ships columnar
 results back.  No per-row UDF, no driver loop, no network hop.
 
 Scale notes (100 TB design point):
-  * The stage is map-only — zero shuffle.  Upstream, runtime.salted_
-    repartition spreads mega-documents (BASELINE skew fixture: 0.1% of
-    docs own 100-1000x median span count) across partitions.
+  * The stage is map-only — zero shuffle.  Upstream,
+    ``extract_with_skew_split`` splits mega-documents (BASELINE skew
+    fixture: 0.1% of docs own 100-1000x median span count) into chunks
+    and spreads them with an AQE rebalance, which sizes the extract
+    tasks by the data it hashes.
   * ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds Python-worker
     memory per batch regardless of doc size distribution.
   * Catalyst prunes unused columns before the Arrow hop because we
@@ -211,17 +213,25 @@ def extract(docs: DataFrame, passthrough: tuple[str, ...] = ()) -> DataFrame:
 
 
 def extract_with_skew_split(docs: DataFrame, num_partitions: int,
-                            max_spans: int = 64, seed: int = 42,
+                            max_spans: int = 64,
                             redistribute: str = "mega-only") -> DataFrame:
     """Skew-proof extract: mega-documents (the 0.1%-of-docs 100-1000x
     span-count fixture) are split into <= max_spans chunks BEFORE a
-    salted repartition, so no single task inherits a whole mega-doc;
-    chunks are extracted independently and reassembled in chunk order.
-    This is the composition job.py / bench use (SURVEY.md §7 skew note).
+    rebalance on (doc_id, chunk_id), so no single task inherits a whole
+    mega-doc; chunks are extracted independently and reassembled in
+    chunk order.  This is the composition job.py / bench use (SURVEY.md
+    §7 skew note).
+
+    The rebalance is an AQE ``REBALANCE`` hint, not a fixed-count
+    repartition: ``num_partitions`` is only its initial bucket count.
+    At run time AQE merges partitions that are too small to pay for a
+    Python task (each costs ~80 ms before its kernel runs) and splits
+    skewed ones (``OptimizeSkewInRebalancePartitions``), so the number
+    of extract tasks follows the bytes that reach the stage.
 
     ``redistribute="mega-only"`` (default) shuffles ONLY the mega-doc
     chunks: single-chunk docs — 99.9% of the corpus — extract where
-    they sit (zero exchanges end-to-end: the salted repartition AND the
+    they sit (zero exchanges end-to-end: the rebalance AND the
     reassemble groupBy both apply to the 0.1% branch alone).  At 100 TB
     this converts two full-corpus shuffles into two 0.1%-sized ones;
     parallelism for the map branch comes from the source's own split
@@ -249,7 +259,7 @@ def extract_with_skew_split(docs: DataFrame, num_partitions: int,
     # which holds at target scale (a 100 TB scan yields thousands of
     # maxPartitionBytes splits per executor) but fails on small inputs
     # whose files the scan packs into a handful of fat splits
-    # (openCostInBytes coalescing) — there the full salted shuffle is
+    # (openCostInBytes coalescing) — there the full rebalance is
     # cheap and buys back task-granularity load balancing, so fall back
     # WITH a log line (callers that must pin the zero-shuffle plan pass
     # "mega-only-strict").
@@ -266,12 +276,9 @@ def extract_with_skew_split(docs: DataFrame, num_partitions: int,
             redistribute = "all"
     elif redistribute == "mega-only-strict":
         redistribute = "mega-only"
-    salt = F.pmod(
-        F.xxhash64(F.col("doc_id"), F.col("chunk_id"), F.lit(seed)),
-        F.lit(num_partitions),
-    )
     if redistribute == "all":
-        chunks = split_mega_docs(docs, max_spans).repartition(num_partitions, salt)
+        chunks = split_mega_docs(docs, max_spans).hint(
+            "rebalance", num_partitions, "doc_id", "chunk_id")
         return reassemble_chunks(extract(chunks, passthrough=("chunk_id",)))
     # singles skip the chunking machinery entirely: n_chunks == 1 iff
     # size(spans) <= max_spans (F.size is -1 for NULL — still single),
@@ -282,7 +289,7 @@ def extract_with_skew_split(docs: DataFrame, num_partitions: int,
     singles = docs.where(F.size("spans") <= max_spans)
     mega = (
         split_mega_docs(docs.where(F.size("spans") > max_spans), max_spans)
-        .repartition(num_partitions, salt)
+        .hint("rebalance", num_partitions, "doc_id", "chunk_id")
     )
     ex_mega = reassemble_chunks(extract(mega, passthrough=("chunk_id",)))
     return extract(singles).unionByName(ex_mega)

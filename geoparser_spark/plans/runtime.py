@@ -40,16 +40,6 @@ DEFAULT_LOGICAL_PARTS = 256
 
 # --------------------------------------------------------------- skew
 
-def salted_repartition(df: DataFrame, num_partitions: int,
-                       key: str = "doc_id", seed: int = 42) -> DataFrame:
-    """Deterministic uniform spread of rows across partitions keyed by
-    a hash of (key, seed) — not round-robin (which depends on input
-    order) and not plain key-hash ranges (which can collide hot).
-    Used before the extract stage (SURVEY.md §4.2)."""
-    salt = F.pmod(F.xxhash64(F.col(key), F.lit(seed)), F.lit(num_partitions))
-    return df.repartition(num_partitions, salt)
-
-
 def split_mega_docs(docs: DataFrame, max_spans: int = 64) -> DataFrame:
     """Explode mega-documents (the 0.1%-of-docs / 100-1000x-median skew
     fixture) into chunk rows of <= max_spans spans each, so no single

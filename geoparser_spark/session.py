@@ -41,6 +41,12 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Spark plans a query that feeds a cache with AQE off by default,
+        # so a persisted grouped Python kernel (build_tile_pyramid's
+        # membership rows) would run every shuffle partition as its own
+        # Python task — 32 tasks of ~80 ms fixed cost each for <= 15
+        # groups.  Let cached plans keep AQE so those partitions coalesce.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # Arrow for every JVM<->Python boundary (mapInPandas batches).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")

@@ -14,7 +14,7 @@ mapInPandas) at any partitioning and still produce identical documents.
 
 Skew fixture (FIXTURES.md §1): every ``mega_every``-th doc gets
 ``mega_factor``× the median span count — the mega-document skew the
-salted repartition must defuse.
+chunk split and its rebalance must defuse.
 """
 
 from __future__ import annotations

@@ -46,7 +46,7 @@ def main(argv: list[str] | None = None) -> int:
     run.add_argument(
         "--redistribute", choices=("mega-only", "all"), default="mega-only",
         help="'mega-only' (default) shuffles only mega-doc chunks; "
-             "'all' restores the full-corpus salted repartition for "
+             "'all' rebalances the whole corpus for "
              "sources whose own partitioning cannot provide parallelism")
     args = p.parse_args(argv)
 

@@ -5,6 +5,7 @@ whole-stage-codegen warmup are expensive; one session amortizes them).
 from __future__ import annotations
 
 import uuid
+from collections import namedtuple
 from contextlib import contextmanager
 
 import pytest
@@ -45,3 +46,32 @@ def spark_jobs(spark):
             ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
     return collect
+
+
+# one stage that ran: one entry per successful task, the rows that task
+# read from its shuffle input (0 for a scan task)
+StageRun = namedtuple("StageRun", "stage_id shuffle_rows")
+
+
+@pytest.fixture
+def spark_stages(spark):
+    """``spark_stages(job_ids)`` lists the stages those jobs ran (in
+    stage-id order; stages skipped because their shuffle output was
+    reused are left out) as :class:`StageRun` rows."""
+    def stages(job_ids):
+        sc = spark.sparkContext
+        tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+        ids = sorted({s for j in job_ids for s in tracker.getJobInfo(j).stageIds})
+        out = []
+        for sid in ids:
+            info = tracker.getStageInfo(sid)
+            if info is None or not info.numCompletedTasks:
+                continue
+            tasks = store.taskList(sid, info.currentAttemptId, info.numTasks)
+            done = [tasks.apply(i) for i in range(tasks.size())]
+            out.append(StageRun(sid, [
+                t.taskMetrics().get().shuffleReadMetrics().recordsRead()
+                for t in done if t.status() == "SUCCESS"]))
+        return out
+
+    return stages

@@ -185,12 +185,13 @@ def test_viewport_tiles_exact(spark):
     assert not viewport_tiles(tiles0, extents0, -90, 90, -180, 180).collect()
 
 
-def test_tile_build_and_reads_job_counts(spark, spark_jobs, tmpdir):
+def test_tile_build_and_reads_job_counts(spark, spark_jobs, spark_stages, tmpdir):
     """The build and its two writes run a fixed handful of Spark jobs
-    (not a per-level loop) and leave nothing cached once the released()
-    block ends (as job.py run --tiles does), a viewport read over the
-    written tiles runs one, and each level= directory holds at most two
-    files."""
+    (not a per-level loop) and tasks (AQE coalesces the cached grouped
+    kernel's shuffle partitions to its few level-1 groups), and leave
+    nothing cached once the released() block ends (as job.py run
+    --tiles does), a viewport read over the written tiles runs one, and
+    each level= directory holds at most two files."""
     from geoparser_spark.plans.caching import released
 
     def n_cached():
@@ -206,6 +207,10 @@ def test_tile_build_and_reads_job_counts(spark, spark_jobs, tmpdir):
         extents.write.mode("overwrite").parquet(os.path.join(out, "extents"))
         assert n_cached() == base + 1
     assert len(build_jobs) <= 12, build_jobs
+    # 26 tasks at 8 shuffle partitions; 61 when the cached kernel's plan
+    # ran without AQE, one task per shuffle partition of each stage
+    n_tasks = sum(len(st.shuffle_rows) for st in spark_stages(build_jobs))
+    assert n_tasks <= 32, n_tasks
     assert n_cached() == base
     t = spark.read.parquet(os.path.join(out, "tiles"))
     e = spark.read.parquet(os.path.join(out, "extents"))

@@ -10,7 +10,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from geoparser_spark.operators.extract import extract
+from geoparser_spark.operators.extract import extract, extract_with_skew_split
 from geoparser_spark.operators.geotag import (
     build_surface_forms,
     candidate_mentions,
@@ -21,7 +21,6 @@ from geoparser_spark.operators.geotag import (
 from geoparser_spark.plans.runtime import (
     reassemble_chunks,
     resumable_stage,
-    salted_repartition,
     split_mega_docs,
     with_part_id,
 )
@@ -58,7 +57,7 @@ def test_extract_matches_golden(docs, expected):
 def test_extract_invariant_under_repartition(docs, expected):
     # span order is data, not row order: any partitioning gives the
     # same per-doc sequence (SURVEY.md §4.2 determinism discipline)
-    _assert_span_equality(extract(salted_repartition(docs, 13)), expected)
+    _assert_span_equality(extract(docs.repartition(13, "doc_id")), expected)
 
 
 def test_split_mega_docs_roundtrip(docs, expected):
@@ -124,6 +123,28 @@ def test_resumable_stage_resumes(spark, docs, expected):
         _assert_span_equality(out3, expected)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_batch_sizes_shuffle_stages_by_data(spark, spark_jobs, spark_stages,
+                                            tmp_path):
+    """A crawl-shaped batch (400 docs, two mega-docs, 16 source files)
+    through resumable_stage(extract_with_skew_split(df, 16)): AQE sizes
+    every stage that reads a shuffle — the extract behind the rebalance,
+    the reassemble and the manifest — by its data.  Each runs fewer
+    tasks than the 16 asked for and no task reads an empty partition
+    (a Python task costs ~80 ms before its kernel runs)."""
+    src = str(tmp_path / "docs")
+    build_docs(spark, 400, seed=42, mega_every=200, mega_factor=100) \
+        .repartition(16, "doc_id").write.parquet(src)
+    with spark_jobs() as jobs:
+        resumable_stage(spark, spark.read.parquet(src),
+                        lambda df: extract_with_skew_split(df, 16),
+                        str(tmp_path / "extracted"), str(tmp_path / "manifest"),
+                        n_parts=16)
+    shuffled = [st for st in spark_stages(jobs) if any(st.shuffle_rows)]
+    assert shuffled, jobs
+    for st in shuffled:
+        assert len(st.shuffle_rows) < 16 and min(st.shuffle_rows) > 0, st
 
 
 def test_manifest_schema_matches_written_manifest(spark, docs, tmp_path):

@@ -37,26 +37,26 @@ def test_tag_join_is_broadcast_not_shuffled(spark, gazetteer, docs):
 
 
 def test_full_pipeline_exchange_budget(spark, gazetteer, docs):
-    """The whole extract+geotag plan carries exactly ONE corpus-grain
-    exchange: the doc_id hash partitioning at geotag's per-doc
-    aggregation (of extracted TEXT, not raw docs).  The salted
-    repartition and the chunk-reassemble exchange exist but sit on the
-    mega-doc branch only (~0.1% of rows — redistribute="mega-only");
-    the gazetteer-side surface dedup contributes one tiny exchange."""
+    """The whole extract+geotag plan carries exactly three exchanges.
+    The tag kernel is a map-side ``mapInArrow`` (no per-doc
+    aggregation exchange); its output rebalance only sizes the files.
+    The mega-doc rebalance and the chunk-reassemble exchange exist but
+    sit on the mega-doc branch only (~0.1% of rows —
+    redistribute="mega-only")."""
     out = geotag(extract_with_skew_split(docs, 8), gazetteer)
     plan = _plan(out)
     corpus_exchanges = [
         l for l in plan.splitlines()
         if "Exchange" in l and "BroadcastExchange" not in l and "Reused" not in l
     ]
-    assert len(corpus_exchanges) <= 4, corpus_exchanges
-    salted = [l for l in corpus_exchanges if "REPARTITION_BY_NUM" in l]
-    assert len(salted) == 1, "expected exactly one salted repartition (mega branch)"
+    assert len(corpus_exchanges) == 3, corpus_exchanges
+    mega = [l for l in corpus_exchanges if "REBALANCE_PARTITIONS_BY_COL" in l]
+    assert len(mega) == 1, "expected exactly one mega-branch rebalance"
 
 
 def test_singles_branch_extract_has_mega_only_exchanges(spark, docs):
-    """extract_with_skew_split alone: both of its exchanges (salt +
-    reassemble) belong to the n_chunks > 1 branch; the single-chunk
+    """extract_with_skew_split alone: both of its exchanges (rebalance
+    + reassemble) belong to the n_chunks > 1 branch; the single-chunk
     branch — 99.9% of a real corpus — runs map-only scan-to-output."""
     plan = _plan(extract_with_skew_split(docs, 8))
     ex = [
@@ -67,7 +67,7 @@ def test_singles_branch_extract_has_mega_only_exchanges(spark, docs):
     # the legacy full-shuffle shape stays available for pathological
     # source partitioning
     plan_all = _plan(extract_with_skew_split(docs, 8, redistribute="all"))
-    assert "REPARTITION_BY_NUM" in plan_all
+    assert "REBALANCE_PARTITIONS_BY_COL" in plan_all
 
 
 def test_projection_pushdown_reaches_scan(spark, tmp_path):

@@ -209,8 +209,8 @@ def main() -> int:
     with open(out_path, "w") as f:
         f.write(f"""# BENCH — scaling evidence ({stamp})
 
-Same job — mega-doc split + salted repartition + Arrow-batched extract
-+ broadcast-gazetteer geotag — over the same deterministic parquet
+Same job — mega-doc split + rebalance + Arrow-batched extract
++ Arrow-kernel geotag — over the same deterministic parquet
 corpus (seed=42, {n_docs:,} docs incl. 0.1% mega-doc skew fixture), at
 two parallelism levels (sandbox stand-in for N vs 4N executors per the
 driver instruction).  Fresh JVM per level; full-pipeline warmup on a
@@ -249,8 +249,8 @@ compares N vs 4N *executors* — separate machines, each bringing its
 own memory controller and bandwidth budget, so per-core bandwidth
 stays constant as the cluster grows instead of shrinking 4x as it
 does inside this single VM.  The dataflow itself has the right
-distributed shape: the corpus side is map-only (split -> salted
-repartition -> Arrow extract -> broadcast-join tag), shuffles touch
+distributed shape: the corpus side is map-only (split -> rebalance
+-> Arrow extract -> Arrow tag kernel), shuffles touch
 only per-doc aggregates (bytes proportional to docs, never to corpus
 body), no stage's task count depends on anything but input size and
 configured parallelism, and there is no driver-side loop or collect
